@@ -908,8 +908,8 @@ FROM ranked WHERE rank <= {k}
 
 def _q_greedy_match_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The skew path: salt_cap_pairs=8 forces virtually every kernel
-    block through the hash-split (nsplit=16) branch — the oracle is the
-    UNCHANGED sequential greedy CTE, proving salting is exact."""
+    block through the weighted range cut (nsplit=16) — the oracle is the
+    UNCHANGED sequential greedy CTE, proving the split is exact."""
     ds, osm = _derived_points(spark, sf_dir)
     cfg = ConflateConfig(duplicate_distance=0.001, salt_cap_pairs=8)
     pipe = ConflatePipeline(spark, cfg)

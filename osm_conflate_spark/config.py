@@ -72,22 +72,13 @@ class ConflateConfig:
     cell_m: float = 200.0
     #: super-block edge in cells for the match kernel grouping (§8.4)
     block_cells: int = 32
-    #: pairs-per-kernel-group cap before the range-cut split kicks in
-    #: (skew guard).  1M pairs ≈ 6 s of kernel CPU — the straggler bound
-    #: a single task may impose on the whole stage at cluster scale;
-    #: oversized blocks are cut into 16 ~equal-pair chunks, so post-split
-    #: kernels are ~cap/16.
+    #: pairs-per-kernel-group cap above which the skew guard splits a
+    #: block, once, before matching round 0.  1M pairs ≈ 6 s of kernel
+    #: CPU — the straggler bound a single task may impose on the whole
+    #: stage at cluster scale; an oversized block is cut by a weighted
+    #: range cut over its cells into 16 ~equal-pair chunks, so post-split
+    #: kernels are ~cap/16.  Deferred rounds keep the split block ids.
     salt_cap_pairs: int = 1_000_000
-    #: skew-split policy for DEFERRED rounds (round 0 always uses the
-    #: weighted range cut): 'range_cut' re-splits oversized deferred
-    #: blocks spatially, 'id_hash' hashes dataset_id, 'off' leaves
-    #: deferred blocks whole.  Measured on the adversarial-skew fixture
-    #: (BENCH/BASELINE.md round 4): deferred pairs INHERIT the round-0
-    #: split block ids, so they are already distributed — per-round live
-    #: sets were bit-identical across all three policies while 'off' had
-    #: the best deferred-round straggler (2.0 s vs 3.7-4.0 s) and skips
-    #: the probe collect entirely.  Default 'off'.
-    salt_deferred: str = "off"
     #: D2 dup graphs up to this many pairs resolve on the driver
     #: (sequential scan, exact); bigger graphs take the distributed
     #: fixpoint.  0 forces the distributed path (driver-contract query)
@@ -150,14 +141,6 @@ class ConflateConfig:
                     f"category {cat!r} max_distance ({r}) exceeds cell_m "
                     f"({self.cell_m}) — k-ring-1 would miss candidates"
                 )
-        # strategy selection in greedy_match compares == 'range_cut', so
-        # a typo would silently fall through to the measured-worst
-        # id-hash policy — reject unknown values here instead
-        if self.salt_deferred not in ("off", "range_cut", "id_hash"):
-            raise ValueError(
-                f"salt_deferred must be one of 'off', 'range_cut', "
-                f"'id_hash' (got {self.salt_deferred!r})"
-            )
 
 
 DEFAULT_CONFIG = ConflateConfig()

@@ -132,8 +132,8 @@ def build_changes(
     # truncated with a LAZY localCheckpoint instead: all consumers then
     # reference one RDD, its stages run once, and nothing executes until
     # the caller's first action (no caching across invocations — each
-    # build_changes call makes a fresh frame, freed by the session's
-    # unpersist sweep).
+    # build_changes call makes a fresh frame, which stays pinned until
+    # the caller unpersists it).
     ds_p = ds.select(
         F.col("id").alias("dataset_id"), "lat", "lon", "tags"
     )

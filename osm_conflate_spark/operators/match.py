@@ -25,23 +25,24 @@ Distributed design (exactness proof sketch in comments):
   terminates; in practice >99% of pairs resolve in round 1 because
   shared OSM points only occur near block borders.
 * Skew (BASELINE.json north_star "explicit salt-based skew splitting"):
-  blocks whose pair count exceeds ``cfg.salt_cap_pairs`` are split by a
-  WEIGHTED RANGE CUT over their cells — probe per-(block, ds_cell) pair
-  counts for the oversized blocks only, sort cells by id (spatially
-  row-major) and cut into contiguous chunks of ~equal pair count on the
-  driver.  Balance is guaranteed by construction regardless of hotspot
-  size (a fixed 4x4 quadrant grid measured max-kernel 2.70M of a 3.01M
-  block when the hotspot fit inside one quadrant; id-hash salting made
-  every dense-block OSM point shared and the deferral cascade cost more
-  than the straggler it saved).  Only OSM points within max_distance of
-  a 1-D cut line become shared.  ``ds_cell`` rides through the kernel
-  output, so DEFERRED rounds keep the range-cut splitter too; the
-  id-hash salt remains only as a fallback for external callers whose
-  prepared pair table genuinely has no ds_cell.  Correctness is
-  unaffected either way because splitting only increases the "shared"
-  set, never breaks the all-pairs-of-one-dataset-point invariant.
-  Granularity floor: one CELL above the cap can't split further — at
-  that density, shrink cfg.cell_m.
+  before round 0, blocks whose pair count exceeds ``cfg.salt_cap_pairs``
+  are split by a WEIGHTED RANGE CUT over their cells — probe
+  per-(block, ds_cell) pair counts for the oversized blocks only, sort
+  cells by id (spatially row-major) and cut into contiguous chunks of
+  ~equal pair count on the driver.  Balance is guaranteed by
+  construction regardless of hotspot size (a fixed 4x4 quadrant grid
+  measured max-kernel 2.70M of a 3.01M block when the hotspot fit
+  inside one quadrant; id-hash salting made every dense-block OSM point
+  shared and the deferral cascade cost more than the straggler it
+  saved).  Only OSM points within max_distance of a 1-D cut line become
+  shared.  Deferred rounds inherit the split block ids and are not
+  re-split (on the adversarial-skew fixture, re-splitting them gave
+  bit-identical live sets and a slower deferred-round straggler:
+  3.7-4.0 s vs 2.0 s).
+  Correctness is unaffected because splitting only increases the
+  "shared" set, never breaks the all-pairs-of-one-dataset-point
+  invariant.  Granularity floor: one CELL above the cap can't split
+  further — at that density, shrink cfg.cell_m.
 
 Everything inside the kernel is vectorized numpy (factorize + lexsort +
 ``np.minimum.at`` rounds); there is no per-row Python anywhere.
@@ -68,7 +69,6 @@ _KERNEL_SCHEMA = T.StructType(
         T.StructField("dist", T.DoubleType()),
         T.StructField("negw", T.DoubleType()),  # U2: -weight (0.0 = no hook)
         T.StructField("block", T.LongType()),
-        T.StructField("ds_cell", T.LongType()),  # rides through for skew split
         T.StructField("status", T.StringType()),  # 'M' matched / 'D' deferred
     ]
 )
@@ -160,7 +160,7 @@ def _greedy_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     )
     out = pdf.loc[
         matched | deferred,
-        ["dataset_id", "osm_pk", "dist", "negw", "block", "ds_cell"],
+        ["dataset_id", "osm_pk", "dist", "negw", "block"],
     ].copy()
     out["status"] = np.where(matched[matched | deferred], "M", "D")
     # per-group lineage row ('L'): n_in/n_out packed in the string cols,
@@ -172,7 +172,6 @@ def _greedy_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             "dist": [(_time.monotonic() - _t0) * 1000.0],
             "negw": [0.0],
             "block": [pdf["block"].iloc[0] if n else -1],
-            "ds_cell": [-1],
             "status": ["L"],
         }
     )
@@ -214,24 +213,19 @@ def _local_greedy_finish(pdf: pd.DataFrame) -> pd.DataFrame:
 _DRIVER_FINISH_MAX = 200_000
 
 
-def _exact_dist(pairs: DataFrame, max_distance: float) -> DataFrame:
+def _exact_dist(pairs: DataFrame) -> DataFrame:
     """Recompute distance in numpy (Arrow-vectorized) and apply the exact
-    cutoff, so the kernel/oracle metric is authoritative (SURVEY §8.5).
-    The cutoff is the per-pair ``radius_eff`` (F3 category overrides)
-    when present, else the global ``max_distance``."""
+    per-pair cutoff ``radius_eff`` (F3 category overrides), so the
+    kernel/oracle metric is authoritative (SURVEY §8.5)."""
 
     @F.pandas_udf("double")
     def _dist(ds_lat: pd.Series, ds_lon: pd.Series,
               osm_lat: pd.Series, osm_lon: pd.Series) -> pd.Series:
         return pd.Series(distance_np(ds_lat, ds_lon, osm_lat, osm_lon))
 
-    cut = (
-        F.col("radius_eff") if "radius_eff" in pairs.columns
-        else F.lit(max_distance)
-    )
     return (
         pairs.withColumn("dist", _dist("ds_lat", "ds_lon", "osm_lat", "osm_lon"))
-        .where(F.col("dist") <= cut)
+        .where(F.col("dist") <= F.col("radius_eff"))
         .drop("dist_pre")
     )
 
@@ -272,15 +266,86 @@ def prepare_pairs(pairs: DataFrame, cfg: ConflateConfig) -> DataFrame:
     """Candidate pairs -> slim (dataset_id, osm_pk, dist, block, ds_cell)
     with the authoritative numpy distance and the exact cutoff applied.
 
+    ``pairs`` is :func:`..operators.candidates.candidate_pairs` output.
     ``ds_cell`` (8 bytes/pair) rides along so the skew guard can split
-    oversized blocks SPATIALLY (quadrants preserve locality — only
-    border OSM points defer) instead of by id hash (which makes every
-    OSM point in a dense block shared and triggers a deferral cascade).
+    oversized blocks SPATIALLY (only border OSM points defer).
     """
     return (
-        _exact_dist(pairs, cfg.max_distance)
+        _exact_dist(pairs)
         .withColumn("block", _block_col(cfg))
         .select("dataset_id", "osm_pk", "dist", "block", "ds_cell")
+    )
+
+
+def _split_oversized(
+    spark: SparkSession,
+    live: DataFrame,
+    n_live: int,
+    cfg: ConflateConfig,
+    stats: Optional[dict],
+) -> DataFrame:
+    """Skew guard: re-key blocks above ``cfg.salt_cap_pairs`` pairs by a
+    WEIGHTED RANGE CUT over their cells.
+
+    Probe per-(block, ds_cell) pair counts for the oversized blocks only
+    (a block is <= block_cells^2 cells and the oversized set is tiny, so
+    the collect is bounded), then cut each block's cell list — sorted by
+    cell id, i.e. spatially row-major — into contiguous chunks of ~equal
+    PAIR count on the driver.  A dataset point's pairs all share its
+    ds_cell, so they stay in one chunk (exactness invariant holds); only
+    OSM points within max_distance of a 1-D cut line become shared.
+    """
+    if n_live <= cfg.salt_cap_pairs:  # no block can be above the cap
+        return live
+    # the oversized set is tiny — collect it once so it can (a) drive the
+    # split and (b) be recorded as lineage evidence that the guard fired
+    ov_rows = (
+        live.groupBy("block").count()
+        .where(F.col("count") > cfg.salt_cap_pairs).collect()
+    )
+    if not ov_rows:
+        return live
+    if stats is not None:
+        stats.setdefault("salt_splits", []).extend(
+            dict(round=0, block=int(r["block"]), n_pairs=int(r["count"]))
+            for r in ov_rows
+        )
+    nsplit = 16
+    ov_df = F.broadcast(
+        spark.createDataFrame([(int(r["block"]),) for r in ov_rows], "block long")
+    )
+    cell_rows = (
+        live.join(ov_df, "block", "left_semi")
+        .groupBy("block", "ds_cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    per_block: dict[int, list] = {}
+    for r in cell_rows:
+        per_block.setdefault(int(r["block"]), []).append(
+            (int(r["ds_cell"]), int(r["n"]))
+        )
+    salt_rows = []
+    for blk, cells in per_block.items():
+        cells.sort()
+        total = sum(n for _, n in cells)
+        target = max(1, -(-total // nsplit))  # ceil
+        acc, salt_i = 0, 0
+        for c, n in cells:
+            if acc + n > target and acc > 0 and salt_i < nsplit - 1:
+                salt_i += 1
+                acc = 0
+            salt_rows.append((blk, c, salt_i))
+            acc += n
+    salt_df = F.broadcast(
+        spark.createDataFrame(salt_rows, "block long, ds_cell long, salt long")
+    )
+    return (
+        live.join(salt_df, ["block", "ds_cell"], "left")
+        .withColumn(
+            "block", F.col("block") * nsplit + F.coalesce(F.col("salt"), F.lit(0))
+        )
+        .drop("salt")
     )
 
 
@@ -290,12 +355,18 @@ def greedy_match(
     cfg: ConflateConfig,
     stats: Optional[dict] = None,
 ) -> DataFrame:
-    """Candidate pairs -> exact greedy matched pairs
-    (dataset_id, osm_pk, dist).
+    """Prepared pairs -> exact greedy matched pairs (dataset_id, osm_pk,
+    dist).
 
-    ``pairs`` must have (dataset_id, osm_pk, ds_lat, ds_lon, osm_lat,
-    osm_lon, dist_pre, ds_cell) as produced by
-    :func:`..operators.candidates.candidate_pairs`.
+    Input: the :func:`prepare_pairs` table (dataset_id, osm_pk, dist,
+    block, ds_cell), plus ``negw`` (-weight) when the U2 weight hook is
+    set; typically checkpointed, since the count, the skew probe and
+    round 0 each scan it.  Output: ``dataset_id`` and ``osm_pk`` are
+    each unique and non-null (greedy is one-to-one), which
+    ``build_changes`` relies on.
+
+    ``stats`` (optional) receives rounds, live_per_round, groups,
+    salt_splits and phase_wall.
     """
     import time as _time
 
@@ -304,38 +375,26 @@ def greedy_match(
             pw = stats.setdefault("phase_wall", {})
             pw[name] = pw.get(name, 0.0) + (_time.monotonic() - t0)
 
-    if "dist" in pairs.columns and "block" in pairs.columns:
-        # caller handed a prepared (and typically checkpointed) pair
-        # table — don't pay a second full copy
-        live = pairs
-    else:
-        t0 = _time.monotonic()
-        live = prepare_pairs(pairs, cfg).localCheckpoint(eager=True)
-        _phase("prepare_pairs", t0)
+    live = pairs
     if "negw" not in live.columns:  # U2 weight hook not installed
         live = live.withColumn("negw", F.lit(0.0))
-    # has_ds_cell gates the range-cut splitter: an all -1 sentinel column
-    # (external caller without ds_cell) would make the range cut a no-op,
-    # so such callers keep the id-hash fallback instead
-    has_ds_cell = "ds_cell" in live.columns
-    if not has_ds_cell:
-        live = live.withColumn("ds_cell", F.lit(-1).cast("long"))
-    live = live.select(
-        "dataset_id", "osm_pk", "dist", "negw", "block", "ds_cell"
+    t0 = _time.monotonic()
+    n_live = live.count()
+    _phase("round_count", t0)
+    t0 = _time.monotonic()
+    live = _split_oversized(spark, live, n_live, cfg, stats).select(
+        "dataset_id", "osm_pk", "dist", "negw", "block"
     )
+    _phase("skew_probe", t0)
 
     matched_parts: list[DataFrame] = []
     live_per_round: list[int] = []
-    # For rounds >= 1 the live count is carried over from the previous
-    # round's POST-kill survivor count (one scan of that round's eager
-    # live checkpoint) — exact for every round, and a fully-killed
-    # deferred set breaks out at the bottom of the loop without paying
-    # an empty kernel round (round-3 ADVICE #1).
-    n_live_next: int | None = None
+    # For rounds >= 1 the live count is the previous round's POST-kill
+    # survivor count (one scan of that round's eager live checkpoint) —
+    # exact for every round, and a fully-killed deferred set breaks out
+    # at the bottom of the loop without paying an empty kernel round
+    # (round-3 ADVICE #1).
     for _round in range(cfg.max_match_rounds):
-        t0 = _time.monotonic()
-        n_live = live.count() if n_live_next is None else n_live_next
-        _phase("round_count", t0)
         if stats is not None:
             live_per_round.append(n_live)
             stats["live_per_round"] = live_per_round
@@ -343,111 +402,6 @@ def greedy_match(
             stats["live_counts_note"] = "exact post-kill counts"
         if n_live == 0:
             break
-
-        # skew guard: split oversized blocks — weighted range cut over
-        # ds_cell (id-hash fallback only without ds_cell); exact either
-        # way, splitting only widens the 'shared' set.  Only worth
-        # checking when the total live count could contain one at all
-        t0 = _time.monotonic()
-        salt_allowed = _round == 0 or cfg.salt_deferred != "off"
-        if salt_allowed and n_live > cfg.salt_cap_pairs:
-            sizes = live.groupBy("block").count()
-            # the oversized set is tiny (blocks above the cap) — collect
-            # it once so it can (a) drive the split and (b) be recorded
-            # as lineage evidence that the skew guard actually fired
-            ov_rows = sizes.where(
-                F.col("count") > cfg.salt_cap_pairs
-            ).collect()
-        else:
-            ov_rows = []
-        if ov_rows:
-            strategy = (
-                "range_cut"
-                if has_ds_cell
-                and (_round == 0 or cfg.salt_deferred == "range_cut")
-                else "id_hash"
-            )
-            if stats is not None:
-                stats.setdefault("salt_splits", []).extend(
-                    dict(round=_round, block=int(r["block"]),
-                         n_pairs=int(r["count"]))
-                    for r in ov_rows
-                )
-                stats.setdefault("salt_strategy", []).append(
-                    dict(round=_round, strategy=strategy)
-                )
-            nsplit = 16
-            ov_df = F.broadcast(
-                spark.createDataFrame(
-                    [(int(r["block"]),) for r in ov_rows], "block long"
-                ).withColumn("oversized", F.lit(True))
-            )
-            if strategy == "range_cut":
-                # WEIGHTED RANGE-CUT split: probe per-(block, ds_cell)
-                # pair counts for the oversized blocks only (a block is
-                # <= block_cells^2 cells, the oversized set is tiny, so
-                # the collect is bounded), then cut the cell list —
-                # sorted by cell id, i.e. spatially row-major — into
-                # contiguous chunks of ~equal PAIR count on the driver.
-                # A dataset point's pairs all share its ds_cell, so they
-                # stay in one chunk (exactness invariant holds); only
-                # OSM points within max_distance of a 1-D cut line
-                # become shared.  This balances REGARDLESS of hotspot
-                # size — a fixed quadrant grid measured max-kernel
-                # 2.70M of a 3.01M block (hotspot smaller than one
-                # quadrant), and hash-salting by dataset_id made every
-                # dense-block OSM point shared (deferral cascade cost
-                # more than the straggler it saved).  Granularity
-                # floor: one CELL above the cap can't split further —
-                # at that density shrink cfg.cell_m.
-                cell_rows = (
-                    live.join(ov_df.drop("oversized"), "block", "left_semi")
-                    .groupBy("block", "ds_cell")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
-                per_block: dict[int, list] = {}
-                for r in cell_rows:
-                    per_block.setdefault(int(r["block"]), []).append(
-                        (int(r["ds_cell"]), int(r["n"]))
-                    )
-                salt_rows = []
-                for blk, cells in per_block.items():
-                    cells.sort()
-                    total = sum(n for _, n in cells)
-                    target = max(1, -(-total // nsplit))  # ceil
-                    acc, salt_i = 0, 0
-                    for c, n in cells:
-                        if acc + n > target and acc > 0 and salt_i < nsplit - 1:
-                            salt_i += 1
-                            acc = 0
-                        salt_rows.append((blk, c, salt_i))
-                        acc += n
-                salt_df = F.broadcast(
-                    spark.createDataFrame(
-                        salt_rows, "block long, ds_cell long, salt long"
-                    )
-                )
-                live = (
-                    live.join(salt_df, ["block", "ds_cell"], "left")
-                    .withColumn(
-                        "block",
-                        F.col("block") * nsplit
-                        + F.coalesce(F.col("salt"), F.lit(0)),
-                    )
-                    .drop("salt")
-                )
-            else:
-                # external caller without ds_cell — id-hash fallback
-                salt = F.pmod(F.xxhash64("dataset_id"), F.lit(nsplit))
-                live = live.join(ov_df, "block", "left").withColumn(
-                    "block",
-                    F.when(
-                        F.col("oversized").isNotNull(),
-                        F.col("block") * nsplit + salt,
-                    ).otherwise(F.col("block") * nsplit),
-                ).drop("oversized")
-        _phase("skew_probe", t0)
 
         # One kernel invocation per PARTITION, not per block: a hash
         # partition is a union of whole blocks, so the invariant "all of
@@ -485,7 +439,6 @@ def greedy_match(
             "dist",
             "negw",
             "block",
-            "ds_cell",
             (F.col("pmin") != F.col("pmax")).alias("shared"),
             (key == F.col("osm_min")).alias("is_gmin"),
         )
@@ -511,7 +464,7 @@ def greedy_match(
             )
         _phase("stats_collect", t0)
         matched_new = result.where(F.col("status") == "M").drop(
-            "status", "block", "negw", "ds_cell"
+            "status", "block", "negw"
         )
         matched_parts.append(matched_new)
 
@@ -530,11 +483,11 @@ def greedy_match(
         live = deferred.join(
             matched_new.select("osm_pk"), "osm_pk", "left_anti"
         ).localCheckpoint(eager=True)
-        n_live_next = live.count()  # one scan of the fresh checkpoint
+        n_live = live.count()  # one scan of the fresh checkpoint
         _phase("live_kill_count", t0)
-        if n_live_next == 0:
+        if n_live == 0:
             break
-        if n_live_next <= _DRIVER_FINISH_MAX:
+        if n_live <= _DRIVER_FINISH_MAX:
             # Finish on the driver: the post-kill survivor set is small
             # and already checkpointed, so this is one checkpoint scan —
             # no wide shuffle, no double execution.
@@ -559,7 +512,7 @@ def greedy_match(
 
     if not matched_parts:
         return spark.createDataFrame([], _KERNEL_SCHEMA).drop(
-            "status", "block", "negw", "ds_cell"
+            "status", "block", "negw"
         )
     out = matched_parts[0]
     for part in matched_parts[1:]:

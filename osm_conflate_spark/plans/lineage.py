@@ -36,6 +36,12 @@ def config_hash(cfg) -> str:
             ).hexdigest()[:12]
             body = hashlib.sha256(code.co_code).hexdigest()[:12]
             return f"{name}:{body}:{consts}"
+        if isinstance(v, (set, frozenset)):
+            # set iteration (and so repr) order follows PYTHONHASHSEED;
+            # sort the members' canonical JSON so every process agrees
+            return sorted(
+                json.dumps(m, default=stable, sort_keys=True) for m in v
+            )
         return repr(v)
 
     payload = json.dumps(

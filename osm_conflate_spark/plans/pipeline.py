@@ -17,6 +17,9 @@ reuse AQE-planned exchanges; the audit table is always broadcast.
 
 from __future__ import annotations
 
+import functools
+import time
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,7 +29,7 @@ from ..functions import tags as tagfns
 from ..operators import changes as chg
 from ..operators.candidates import candidate_pairs, with_osm_pk
 from ..operators.dedup import ref_dedup, spatial_dedup
-from ..operators.match import greedy_match
+from ..operators.match import apply_match_predicate, greedy_match, prepare_pairs
 from .lineage import StageRunner, config_hash, input_fingerprint
 
 
@@ -43,6 +46,8 @@ class ConflatePipeline:
         self.runner = StageRunner(
             spark, out_dir=out_dir, cfg_hash=config_hash(self.cfg), resume=resume
         )
+        #: greedy_match stats of the last match (empty when it was resumed)
+        self.last_match_stats: dict = {}
 
     # -- individual stages --------------------------------------------------
 
@@ -73,21 +78,35 @@ class ConflatePipeline:
         audit: DataFrame | None = None,
         broadcast_osm: bool = False,
     ) -> tuple[DataFrame, DataFrame]:
-        """Returns (matched_pairs, vicinity)."""
-        from ..operators.match import apply_match_predicate, prepare_pairs
+        """Returns (matched_pairs, vicinity), both from one pair table."""
+        self.last_match_stats = {}
+        pairs = self.prepared_pairs(ds, osm_pk_df, broadcast_osm)
+        return self.match_pairs(pairs, ds, osm_pk_df, audit), _vicinity(pairs)
 
-        import time as _time
-
-        stats: dict = {}
-        t0 = _time.monotonic()
+    def prepared_pairs(
+        self, ds: DataFrame, osm_pk_df: DataFrame, broadcast_osm: bool = False
+    ) -> DataFrame:
+        """J1 candidates -> the prepared pair table (dataset_id, osm_pk,
+        dist, block, ds_cell), eagerly checkpointed: the ONE
+        materialization that serves the vicinity set, the audit skip and
+        the matcher."""
+        t0 = time.monotonic()
         pairs = candidate_pairs(ds, osm_pk_df, self.cfg, broadcast_osm=broadcast_osm)
-        # ONE materialization of the slim (id, pk, dist, block) pair table
-        # serves the vicinity set, the audit skip, and the matcher
         pairs = prepare_pairs(pairs, self.cfg).localCheckpoint(eager=True)
-        stats["phase_wall"] = {"prepare_pairs": _time.monotonic() - t0}
-        # vicinity (J5) uses the RAW radius candidates — computed before
-        # the J3 predicate veto, matching the reference
-        vicinity = pairs.select("osm_pk").distinct()
+        self.last_match_stats.setdefault("phase_wall", {})["prepare_pairs"] = (
+            time.monotonic() - t0
+        )
+        return pairs
+
+    def match_pairs(
+        self,
+        pairs: DataFrame,
+        ds: DataFrame,
+        osm_pk_df: DataFrame,
+        audit: DataFrame | None = None,
+    ) -> DataFrame:
+        """Prepared pair table -> exact greedy matched pairs, after the J3
+        predicate veto, the U2 weights and the J6 audit skip."""
         if self.cfg.matches is not None:
             pairs = apply_match_predicate(pairs, ds, osm_pk_df, self.cfg)
         if self.cfg.weight is not None:
@@ -111,22 +130,22 @@ class ConflatePipeline:
                 audit.where(F.col("skip")).select(F.col("dataset_id"))
             )
             pairs = pairs.join(skips, "dataset_id", "left_anti")
+        stats = self.last_match_stats
         matched = greedy_match(self.spark, pairs, self.cfg, stats=stats)
-        self.last_match_stats = stats
         for g in stats.get("groups", []):
             self.runner.lineage.append(
                 dict(stage="match_kernel", group_id=g["block"], n_in=g["n_in"],
                      n_out=g["n_matched"], wall_ms=g["wall_ms"], resumed=False)
             )
         # skew-guard evidence: which blocks exceeded salt_cap_pairs and
-        # were hash-split (n_in = the pre-split pair count)
+        # were range-cut (n_in = the pre-split pair count)
         for srec in stats.get("salt_splits", []):
             self.runner.lineage.append(
                 dict(stage="salt_split", group_id=srec["block"],
                      n_in=srec["n_pairs"], n_out=-1, wall_ms=0.0,
                      resumed=False)
             )
-        return matched, vicinity
+        return matched
 
     # -- full run -------------------------------------------------------------
 
@@ -138,6 +157,7 @@ class ConflatePipeline:
         broadcast_osm: bool = False,
     ) -> dict:
         r = self.runner
+        self.last_match_stats = {}
         # resume cache keys on (config hash, INPUT fingerprint): changing
         # the input paths invalidates stale stage parquet (ADVICE round 1)
         r.input_sig = input_fingerprint(ds_raw, osm_raw)
@@ -148,25 +168,18 @@ class ConflatePipeline:
             # inside prepare_dataset (pre-dedup checkpoint) and only the
             # cheap anti-join re-runs per branch
             osm = osm.localCheckpoint(eager=True)
-        matched_box: dict = {}
-
-        def _match():
-            m, v = self.match(ds, osm, audit, broadcast_osm)
-            matched_box["vicinity"] = v.localCheckpoint(eager=True)
-            return m
-
-        matched = r.run("match", _match)
-        if "vicinity" not in matched_box:  # match stage resumed from parquet
-            from ..operators.match import prepare_pairs
-
-            pairs = candidate_pairs(ds, osm, self.cfg, broadcast_osm=broadcast_osm)
-            matched_box["vicinity"] = (
-                prepare_pairs(pairs, self.cfg).select("osm_pk").distinct()
-            )
+        # built on first use, at most once: a stage restored from its
+        # checkpoint never asks, so a full resume runs no candidate join
+        pairs = functools.cache(
+            lambda: self.prepared_pairs(ds, osm, broadcast_osm)
+        )
+        matched = r.run(
+            "match", lambda: self.match_pairs(pairs(), ds, osm, audit)
+        )
         changes = r.run(
             "changes",
             lambda: chg.build_changes(
-                matched, ds, osm, matched_box["vicinity"], self.cfg, audit
+                matched, ds, osm, _vicinity(pairs()), self.cfg, audit
             ),
         )
         tiles = r.run("tiles", lambda: chg.tiles(ds, self.cfg))
@@ -185,6 +198,13 @@ class ConflatePipeline:
             geojson=chg.geojson_rows(changes),
             lineage=r.lineage_df,
         )
+
+
+def _vicinity(pairs: DataFrame) -> DataFrame:
+    """J5 vicinity: the OSM points within the match radius of some
+    dataset point — from the RAW radius pairs, before the J3 predicate
+    veto, matching the reference."""
+    return pairs.select("osm_pk").distinct()
 
 
 _TMPFS_MIN_FREE_BYTES = 8 << 30  # shuffle spill needs real headroom

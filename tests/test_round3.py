@@ -210,6 +210,29 @@ def test_config_hash_sensitive_to_hook_body():
     # builtins (no __code__) still hash stably
     cfg_c = ConflateConfig(weight=len)
     assert config_hash(cfg_c) == config_hash(ConflateConfig(weight=len))
+    # set-valued fields (master_tags) hash the same in every process, so
+    # a fresh-process --resume finds its checkpoints: set iteration order
+    # follows PYTHONHASHSEED
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from osm_conflate_spark.config import ConflateConfig\n"
+        "from osm_conflate_spark.plans.lineage import config_hash\n"
+        "print(config_hash(ConflateConfig(master_tags=frozenset("
+        "{'name', 'opening_hours', 'phone', 'website', 'brand'}))))"
+    )
+    hashes = {
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=repo, check=True,
+            capture_output=True, text=True,
+            env=dict(os.environ, PYTHONHASHSEED=seed),
+        ).stdout.strip()
+        for seed in ("1", "4")
+    }
+    assert len(hashes) == 1, hashes
 
 
 # ---------------------------------------------------------------------------

@@ -1,9 +1,7 @@
 """Round-4 additions:
 
-* deferred matcher rounds keep the weighted range-cut skew splitter
-  (``ds_cell`` now rides through the kernel output) — the id-hash
-  fallback the round-2 skew study measured as harmful must never fire
-  for pipeline-produced pairs, even in rounds >= 1;
+* the weighted range-cut skew splitter fires before round 0 only;
+  deferred rounds keep the split block ids and stay exact;
 * managed-table round-trip through the real ``spark.read.table`` branch;
 * streaming sessionization late/out-of-order robustness vs batch twin.
 """
@@ -58,37 +56,11 @@ def _dense_world(n=400, seed=9):
     return ds, osm
 
 
-def test_deferred_rounds_keep_range_cut_splitter(spark, monkeypatch):
-    """Force fully-distributed multi-round matching (driver finish
-    disabled) on a dense skewed cluster with a tiny salt cap, with
-    ``salt_deferred='range_cut'``: the skew guard must fire in a round
-    >= 1 and take the range-cut branch (``ds_cell`` rides through the
-    kernel output) — never the id-hash fallback the round-2 skew study
-    measured harmful — and the match set must still equal the
-    sequential oracle."""
-    monkeypatch.setattr(match_mod, "_DRIVER_FINISH_MAX", 0)
-    ds, osm = _dense_world()
-    cfg = ConflateConfig(
-        salt_cap_pairs=1000, duplicate_distance=0.01,
-        salt_deferred="range_cut",
-    )
-    res_o = rm.conflate(ds_to_oracle(ds), osm_to_oracle(osm), cfg)
-    pipe = ConflatePipeline(spark, cfg)
-    res_s = pipe.run(ds_to_spark(spark, ds), osm_to_spark(spark, osm))
-    assert matched_set_spark(res_s["matched"]) == matched_set_oracle(res_o)
-    stats = pipe.last_match_stats
-    assert stats["rounds"] >= 2, "fixture failed to force a deferred round"
-    strategies = stats.get("salt_strategy", [])
-    late = [s for s in strategies if s["round"] >= 1]
-    assert late, "skew guard never fired in a deferred round"
-    assert all(s["strategy"] == "range_cut" for s in strategies), strategies
-
-
 def test_deferred_rounds_default_no_resplit(spark, monkeypatch):
-    """Default policy ``salt_deferred='off'`` (measured in round 4:
+    """The skew guard splits once, before round 0 (measured in round 4:
     deferred pairs inherit the round-0 split blocks, re-splitting only
-    adds overhead): deferred rounds never split at all — and the
-    id-hash branch never fires for pipeline-produced pairs."""
+    adds overhead): deferred rounds never split, and the match set still
+    equals the sequential oracle."""
     monkeypatch.setattr(match_mod, "_DRIVER_FINISH_MAX", 0)
     ds, osm = _dense_world()
     cfg = ConflateConfig(salt_cap_pairs=1000, duplicate_distance=0.01)
@@ -98,9 +70,9 @@ def test_deferred_rounds_default_no_resplit(spark, monkeypatch):
     assert matched_set_spark(res_s["matched"]) == matched_set_oracle(res_o)
     stats = pipe.last_match_stats
     assert stats["rounds"] >= 2
-    strategies = stats.get("salt_strategy", [])
-    assert all(s["round"] == 0 for s in strategies), strategies
-    assert all(s["strategy"] == "range_cut" for s in strategies), strategies
+    splits = stats.get("salt_splits", [])
+    assert splits, "skew guard never fired"
+    assert all(s["round"] == 0 for s in splits), splits
 
 
 FIX_IMAGES = __import__("os").path.join(

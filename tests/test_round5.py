@@ -3,13 +3,10 @@
 * the matcher breaks as soon as the cross-block kill empties the
   deferred set — no empty trailing kernel round, and ``live_per_round``
   reports exact POST-kill counts (round-3 ADVICE #1 / round-4 verdict
-  #3);
-* ``salt_deferred`` typos raise instead of silently selecting the
-  measured-worst id-hash policy (round-4 ADVICE).
+  #3).
 """
 
 import pandas as pd
-import pytest
 
 from osm_conflate_spark.config import ConflateConfig
 from osm_conflate_spark.operators import match as match_mod
@@ -48,6 +45,7 @@ def test_fully_killed_deferred_set_ends_loop(spark, monkeypatch):
                 "dist": [1.0, 2.0],
                 "negw": [0.0, 0.0],
                 "block": pd.array([b0, b1], dtype="int64"),
+                "ds_cell": pd.array([0, 0], dtype="int64"),
             }
         )
     )
@@ -84,6 +82,7 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
                 "dist": [1.0, 2.0, 0.5, 3.0, 4.0],
                 "negw": [0.0] * 5,
                 "block": pd.array([b0, b1, b0, b0, b1], dtype="int64"),
+                "ds_cell": pd.array([0] * 5, dtype="int64"),
             }
         )
     )
@@ -95,15 +94,6 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
     # killed pair never re-enters
     assert stats["rounds"] == 2, stats
     assert stats["live_per_round"] == [5, 1], stats
-
-
-def test_salt_deferred_typo_rejected():
-    """Round-4 ADVICE: a typo like 'rangecut' must raise, not silently
-    fall through to the id-hash strategy."""
-    with pytest.raises(ValueError, match="salt_deferred"):
-        ConflateConfig(salt_deferred="rangecut")
-    for ok in ("off", "range_cut", "id_hash"):
-        ConflateConfig(salt_deferred=ok)
 
 
 # --------------------------------------------------------------------------
