@@ -249,7 +249,7 @@ def _portable(name: str) -> str:
             FROM documents
             GROUP BY source
         """,
-        # Z-order / Morton key (layout clustering; operators/layout.py)
+        # Z-order / Morton key (layout clustering; functions/sqlgen.py)
         "zorder_key": f"""
             WITH pts AS ({_DS_PTS}),
             q AS (SELECT k, {sqlgen.quantize_sql('lon', -180.0, 180.0, 16)} AS ix,

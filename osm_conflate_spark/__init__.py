@@ -10,14 +10,12 @@ Layout:
   functions/tags.py    tag transform F2/F5, tag merge X2 (map-typed column ops)
   functions/text.py    language-id, quality score, token count, fingerprint
   functions/vectors.py cosine similarity / ANN helpers
-  sources/pages.py     synthetic Common-Crawl-style pages generator + reader
   sources/extract.py   U1 Arrow-vectorized html→text extractor (frozen)
   operators/candidates.py  J1 cell equi-join candidate search
   operators/match.py       J2 exact distributed greedy matcher (applyInPandas)
   operators/dedup.py       D1/D2 + exact/minhash/simhash/ngram/embedding dedup
   operators/changes.py     X2/X3/X4, J4/J5/J6 change emission, osc X5, geojson X6
   operators/similarity.py  ANN top-k over embeddings
-  operators/multimodal.py  binary-column decode/feature plumbing (decode stubbed)
   plans/pipeline.py    E1 end-to-end conflation pipeline (stage DAG)
   plans/lineage.py     checkpoint/resume manifests + per-partition lineage
   reference_model.py   pure-Python oracle of the reference semantics (test-only)

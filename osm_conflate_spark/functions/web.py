@@ -294,7 +294,7 @@ def url_normalize_sql(url: str) -> str:
         f"regexp_extract({url}, "
         f"'^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(/[^?#]*)', 1)"
     )
-    query = f"regexp_extract({url}, '^[^#]*[?]([^#]*)', 1)"
+    query = f"regexp_extract({url}, '^[^?#]*[?]([^#]*)', 1)"
     keep_port = (
         f"CASE WHEN {port} = '' OR ({scheme} = 'http' AND {port} = '80') "
         f"OR ({scheme} = 'https' AND {port} = '443') THEN '' "

@@ -1,5 +1,5 @@
 """Operator tests: training-pipeline dedup family, similarity search,
-text functions, multimodal plumbing, checkpoint/resume."""
+text functions, checkpoint/resume."""
 
 import numpy as np
 import pandas as pd
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from osm_conflate_spark.operators import dedup as dd
 from osm_conflate_spark.operators import similarity as sim
-from osm_conflate_spark.operators.multimodal import extract_media_features
 from osm_conflate_spark.functions import text as tf
 
 SF = "/root/testdata/sf0.001"
@@ -216,32 +215,6 @@ def test_fingerprint_matches_python_twin(spark, docs):
     df2 = spark.createDataFrame([(1, same), (2, same)], "doc_id long, text string")
     fp2 = {r["doc_id"]: r["fp"] for r in df2.select("doc_id", tf.fingerprint_col("text").alias("fp")).collect()}
     assert fp2[1] == fp2[2]
-
-
-# ---------------------------------------------------------------------------
-# multimodal plumbing
-# ---------------------------------------------------------------------------
-
-def test_media_features_fake_decoder(spark):
-    rows = [
-        (1, "image", bytearray(b"\x01\x02\x03\x04"), {"w": "2", "h": "2"}),
-        (2, "audio", bytearray(b"\xff" * 100), {"sr": "16000"}),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, meta map<string,string>"
-    )
-    out = {r["media_id"]: r for r in extract_media_features(df, "fake").collect()}
-    assert out[1]["n_bytes"] == 4 and abs(out[1]["byte_mean"] - 2.5) < 1e-9
-    assert out[2]["n_bytes"] == 100 and out[2]["byte_mean"] == 255.0
-
-
-def test_media_real_decoder_is_stubbed(spark):
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(b"x"), {})],
-        "media_id long, kind string, payload binary, meta map<string,string>",
-    )
-    with pytest.raises(Exception):  # NotImplementedError surfaces as PythonException
-        extract_media_features(df, "real").collect()
 
 
 # ---------------------------------------------------------------------------

@@ -75,114 +75,6 @@ def test_deferred_rounds_default_no_resplit(spark, monkeypatch):
     assert all(s["round"] == 0 for s in splits), splits
 
 
-FIX_IMAGES = __import__("os").path.join(
-    __import__("os").path.dirname(__file__), "fixtures", "images"
-)
-
-
-def _pattern(h, w, c):
-    y, x, ch = np.meshgrid(
-        np.arange(h), np.arange(w), np.arange(c), indexing="ij"
-    )
-    return ((x * 7 + y * 13 + ch * 101 + (x * y) % 29) % 256).astype(np.uint8)
-
-
-@pytest.mark.parametrize(
-    "fname,shape",
-    [
-        ("rgb_mixed_filters.png", (23, 17, 3)),
-        ("gray_paeth.png", (16, 16, 1)),
-        ("rgba_updown.png", (12, 9, 4)),
-        ("rgb_oddwidth.bmp", (11, 13, 3)),
-        ("rgb.ppm", (8, 21, 3)),
-    ],
-)
-def test_image_decode_goldens(fname, shape):
-    """Committed real bytes -> exact pixel recovery.  The PNG fixtures
-    cycle all five scanline filters, the BMP has odd width (row padding),
-    so each decoder branch is hit from on-disk bytes."""
-    import os
-
-    from osm_conflate_spark.operators.imagecodec import decode_image
-
-    with open(os.path.join(FIX_IMAGES, fname), "rb") as f:
-        img = decode_image(f.read())
-    assert img.shape == shape
-    np.testing.assert_array_equal(img, _pattern(*shape))
-
-
-def test_png_palette_roundtrip():
-    """Palette (color type 3) PNG: indices expand through PLTE."""
-    import struct
-    import zlib
-
-    from osm_conflate_spark.operators.imagecodec import decode_png
-
-    idx = (np.arange(30, dtype=np.uint8).reshape(5, 6) % 4)
-    palette = np.array(
-        [[255, 0, 0], [0, 255, 0], [0, 0, 255], [7, 7, 7]], dtype=np.uint8
-    )
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(5))
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 6, 5, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", palette.tobytes())
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    np.testing.assert_array_equal(decode_png(png), palette[idx])
-
-
-def test_image_decode_rejects_jpeg_and_garbage():
-    from osm_conflate_spark.operators.imagecodec import decode_image
-
-    with pytest.raises(NotImplementedError, match="JPEG"):
-        decode_image(b"\xff\xd8\xff\xe0rest")
-    with pytest.raises(ValueError):
-        decode_image(b"\x00\x01\x02\x03\x04\x05\x06\x07")
-
-
-def test_extract_image_features_spark(spark):
-    """Spark-side decode: good PNG/BMP/PPM rows get exact pixel stats,
-    a JPEG row and a truncated-PNG row skip-and-log via ``err``."""
-    import os
-
-    from osm_conflate_spark.operators.multimodal import extract_image_features
-
-    payloads = {}
-    for fname in ("rgb_mixed_filters.png", "rgb_oddwidth.bmp", "rgb.ppm"):
-        with open(os.path.join(FIX_IMAGES, fname), "rb") as f:
-            payloads[fname] = f.read()
-    rows = [
-        (1, "image", payloads["rgb_mixed_filters.png"], {}),
-        (2, "image", payloads["rgb_oddwidth.bmp"], {}),
-        (3, "image", payloads["rgb.ppm"], {}),
-        (4, "image", b"\xff\xd8\xff\xe0jpegjpeg", {}),
-        (5, "image", payloads["rgb_mixed_filters.png"][:40], {}),
-    ]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, meta map<string,string>"
-    )
-    out = {r["media_id"]: r for r in extract_image_features(media).collect()}
-    assert len(out) == 5
-    exp = _pattern(23, 17, 3)
-    r1 = out[1]
-    assert (r1["width"], r1["height"], r1["channels"]) == (17, 23, 3)
-    assert abs(r1["px_mean"] - float(exp.mean())) < 1e-9
-    assert abs(r1["px_std"] - float(exp.std())) < 1e-9
-    assert out[2]["width"] == 13 and out[3]["width"] == 21
-    assert out[4]["err"] is not None and "JPEG" in out[4]["err"]
-    assert out[4]["px_mean"] is None
-    assert out[5]["err"] is not None and out[5]["width"] is None
-
-
 def _star_ring(n=16, lat0=40.0, lon0=-100.0, r_out=8.0, r_in=3.0):
     """Concave star polygon — no horizontal edges (odd vertex count per
     lobe + irrational-ish angles keep consecutive lats distinct)."""

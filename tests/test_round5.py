@@ -96,108 +96,6 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
     assert stats["live_per_round"] == [5, 1], stats
 
 
-# --------------------------------------------------------------------------
-# WAV audio decode (round-4 verdict #7): golden fixtures written by the
-# stdlib `wave` module, read back by the from-scratch RIFF parser — an
-# independent writer/reader cross-check, like the image goldens.
-
-import os
-import struct
-
-import numpy as np
-
-FIX = os.path.join(os.path.dirname(__file__), "fixtures", "audio")
-
-
-def _fx(name):
-    with open(os.path.join(FIX, name), "rb") as f:
-        return f.read()
-
-
-def test_decode_wav_goldens():
-    from osm_conflate_spark.operators.audiocodec import decode_wav
-
-    s, rate = decode_wav(_fx("sine16_stereo.wav"))
-    assert (s.shape, rate) == ((800, 2), 8000)
-    t = np.arange(800) / 8000.0
-    want = np.stack(
-        [np.sin(2 * np.pi * 440 * t), 0.5 * np.sin(2 * np.pi * 220 * t)], 1
-    )
-    # writer quantized to int16 (x32767), reader rescales /32768
-    assert np.abs(s - want * (32767 / 32768)).max() < 1e-4 + 1 / 32768
-
-    s, rate = decode_wav(_fx("ramp8_mono.wav"))
-    assert (s.shape, rate) == ((256, 1), 4000)
-    want = (np.linspace(0, 255, 256).astype(np.uint8) - 128.0) / 128.0
-    assert np.array_equal(s[:, 0], want)
-
-    s, rate = decode_wav(_fx("sine24_mono.wav"))
-    assert (s.shape, rate) == ((300, 1), 16000)
-    want = np.sin(2 * np.pi * 100 * t[:300])
-    assert np.abs(s[:, 0] - want).max() < 2 / 8388608
-
-    s, rate = decode_wav(_fx("noise_f32.wav"))
-    assert (s.shape, rate) == ((500, 1), 22050)
-    rng = np.random.default_rng(7)
-    assert np.array_equal(
-        s[:, 0], rng.uniform(-1, 1, 500).astype("<f4").astype(np.float64)
-    )
-
-    s, rate = decode_wav(_fx("ext16_mono.wav"))  # WAVE_FORMAT_EXTENSIBLE
-    assert (s.shape, rate) == ((200, 1), 8000)
-
-
-def test_decode_wav_rejects_bad_bytes():
-    import pytest as _pytest
-
-    from osm_conflate_spark.operators.audiocodec import decode_wav
-
-    with _pytest.raises(ValueError, match="RIFF"):
-        decode_wav(b"\xff\xd8\xff\xe0 not a wav")
-    with _pytest.raises(ValueError, match="truncated"):
-        decode_wav(_fx("sine16_stereo.wav")[:100])
-    # ADPCM format code -> honest NotImplementedError
-    fmt = struct.pack("<HHIIHH", 2, 1, 8000, 8000, 1, 4)
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", 4) + b"\x00" * 4)
-    adpcm = b"RIFF" + struct.pack("<I", len(body)) + body
-    with _pytest.raises(NotImplementedError, match="format code 2"):
-        decode_wav(adpcm)
-
-
-def test_extract_audio_features_spark(spark):
-    """Arrow-batched mapInPandas over a media table: real stats for the
-    five goldens, skip-and-log for undecodable rows."""
-    from osm_conflate_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    rows = [
-        (1, "audio", _fx("sine16_stereo.wav"), {}),
-        (2, "audio", _fx("ramp8_mono.wav"), {}),
-        (3, "audio", _fx("noise_f32.wav"), {}),
-        (4, "audio", b"\x00\x01garbage", {}),
-        (5, "audio", _fx("ext16_mono.wav"), {}),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta map<string,string>",
-    )
-    out = {r["media_id"]: r for r in extract_audio_features(media).collect()}
-    assert out[1]["n_channels"] == 2 and out[1]["sample_rate"] == 8000
-    assert abs(out[1]["duration_sec"] - 0.1) < 1e-9
-    t = np.arange(800) / 8000.0
-    want = np.stack(
-        [np.sin(2 * np.pi * 440 * t), 0.5 * np.sin(2 * np.pi * 220 * t)], 1
-    ) * (32767 / 32768)
-    assert abs(out[1]["rms"] - float(np.sqrt((want**2).mean()))) < 1e-3
-    assert out[2]["n_frames"] == 256 and out[2]["err"] is None
-    assert out[3]["sample_rate"] == 22050
-    assert out[4]["err"] is not None and out[4]["rms"] is None
-    assert out[5]["n_frames"] == 200
-
-
 def test_dup_shingle_hot_escape_matches_window_path(spark):
     """Skewed fixture: one viral 8-word boilerplate shingle in 60 of 80
     docs.  The heavy-hitter escape (broadcast join for over-threshold
@@ -509,13 +407,15 @@ def test_bm25_topk_plan(spark):
 
 
 # ---------------------------------------------------------------------------
-# Z-order layout (operators/layout.py)
+# Z-order key (functions/sqlgen.py; the `zorder_key` contract query)
 
 
 def test_zorder_prefix_locality(spark):
     """Points that share a coarse grid cell at resolution r share the
     top 2r bits of the 32-bit key (the property pruning relies on)."""
-    from osm_conflate_spark.operators.layout import with_zorder_key
+    from pyspark.sql import functions as F
+
+    from osm_conflate_spark.functions import sqlgen
 
     pts = [
         (1, 10.0001, 20.0001),
@@ -523,30 +423,16 @@ def test_zorder_prefix_locality(spark):
         (3, -45.0, -120.0),      # far away
     ]
     df = spark.createDataFrame(pts, "k long, lat double, lon double")
-    got = {r["k"]: r["zkey"] for r in with_zorder_key(df).collect()}
+    q = df.select(
+        "k",
+        F.expr(sqlgen.quantize_sql("lon", -180.0, 180.0, 16)).alias("ix"),
+        F.expr(sqlgen.quantize_sql("lat", -90.0, 90.0, 16)).alias("iy"),
+    )
+    zkey = F.expr(sqlgen.zorder_interleave_sql("ix", "iy", 16)).alias("zkey")
+    got = {r["k"]: r["zkey"] for r in q.select("k", zkey).collect()}
     # coarse prefix: top 16 of 32 bits == 8-bit-per-axis resolution
     assert got[1] >> 16 == got[2] >> 16
     assert got[1] >> 16 != got[3] >> 16
     # interleave is a bijection on the quantized grid: distinct cells
     # at full resolution -> distinct keys
     assert len(set(got.values())) >= 2
-
-
-def test_cluster_by_zorder_plan_and_order(spark):
-    from osm_conflate_spark.operators.layout import cluster_by_zorder
-
-    rows = [(i, (i * 7 % 180) - 90.0, (i * 13 % 360) - 180.0) for i in range(200)]
-    df = spark.createDataFrame(rows, "k long, lat double, lon double")
-    out = cluster_by_zorder(df, num_partitions=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning(zkey" in plan
-    # within every partition the key is sorted
-    import pandas as pd
-
-    def check(it):
-        for pdf in it:
-            assert (pdf["zkey"].sort_values().values == pdf["zkey"].values).all()
-            yield pdf[["k"]]
-
-    n = out.mapInPandas(check, "k long").count()
-    assert n == 200

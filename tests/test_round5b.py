@@ -9,8 +9,6 @@
   validation, exhaustiveness, engine identity, append-stability.
 """
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -210,6 +208,7 @@ _MESSY_URLS = [
     "http://a.com:8080/",
     "https://a.com/#only-fragment",
     "http://x@b.net/q?y#f",
+    "http://a.com/p?x=1?y=2#f",
 ]
 
 
@@ -278,90 +277,3 @@ def test_normalize_text_collapses_variants(spark):
     assert got_spark == got_duck
     assert got_spark[:4] == ["hello world"] * 4
     assert got_spark[4] == "different text"
-
-
-# ---------------------------------------------------------------------------
-# Douglas-Peucker simplification
-# ---------------------------------------------------------------------------
-
-def _dp_ref(pts, eps):
-    """Independent oracle: the textbook RECURSIVE Douglas-Peucker on
-    planar points (the engine kernel is the iterative-stack variant)."""
-    def rec(lo, hi, keep):
-        if hi - lo < 2:
-            return
-        (x1, y1), (x2, y2) = pts[lo], pts[hi]
-        seg = math.hypot(x2 - x1, y2 - y1)
-        best_d, best_k = -1.0, -1
-        for k in range(lo + 1, hi):
-            px, py = pts[k]
-            if seg == 0.0:
-                d = math.hypot(px - x1, py - y1)
-            else:
-                d = abs((y2 - y1) * px - (x2 - x1) * py
-                        + x2 * y1 - y2 * x1) / seg
-            if d > best_d:
-                best_d, best_k = d, k
-        if best_d > eps:
-            keep.add(best_k)
-            rec(lo, best_k, keep)
-            rec(best_k, hi, keep)
-
-    keep = {0, len(pts) - 1}
-    rec(0, len(pts) - 1, keep)
-    return sorted(keep)
-
-
-def test_dp_mask_matches_recursive_reference():
-    from osm_conflate_spark.operators.simplify import dp_mask_np
-
-    rng = np.random.default_rng(3)
-    for trial in range(25):
-        n = int(rng.integers(2, 60))
-        pts = rng.uniform(0, 100, size=(n, 2))
-        eps = float(rng.uniform(0.1, 30))
-        mask = dp_mask_np(pts[:, 0].copy(), pts[:, 1].copy(), eps)
-        assert sorted(np.nonzero(mask)[0].tolist()) == \
-            _dp_ref([tuple(p) for p in pts], eps)
-
-
-def test_dp_degenerate_inputs():
-    from osm_conflate_spark.operators.simplify import dp_mask_np
-
-    assert dp_mask_np(np.array([]), np.array([]), 1.0).tolist() == []
-    assert dp_mask_np(np.array([1.0]), np.array([2.0]), 1.0).tolist() == [True]
-    # closed ring (first == last): must not divide by zero
-    x = np.array([0.0, 5.0, 5.0, 0.0, 0.0])
-    y = np.array([0.0, 0.0, 5.0, 5.0, 0.0])
-    m = dp_mask_np(x, y, 1.0)
-    assert m[0] and m[-1] and m.sum() >= 4  # corners survive
-
-
-def test_simplify_ways_spark(spark):
-    from osm_conflate_spark.operators.simplify import (
-        simplify_line_np,
-        simplify_ways,
-    )
-
-    # way 1: a straight line with a 0.01-degree kink; way 2: straight
-    rows = []
-    for i in range(11):
-        rows.append((1, i, 10.0 + (0.01 if i == 5 else 0.0), float(i) * 0.001))
-        rows.append((2, i, 20.0, float(i) * 0.001))
-    df = spark.createDataFrame(
-        rows, "way_id long, seq long, lat double, lon double")
-    # epsilon below the ~1.1 km kink: kink survives; above: collapses
-    small = simplify_ways(df, 100.0).collect()
-    big = simplify_ways(df, 5000.0).collect()
-    kept_small = sorted(r["seq"] for r in small if r["way_id"] == 1)
-    kept_big = sorted(r["seq"] for r in big if r["way_id"] == 1)
-    assert 5 in kept_small and kept_small[0] == 0 and kept_small[-1] == 10
-    assert kept_big == [0, 10]
-    assert sorted(r["seq"] for r in big if r["way_id"] == 2) == [0, 10]
-    # Spark result equals the local kernel per way
-    lats = np.array([10.0 + (0.01 if i == 5 else 0.0) for i in range(11)])
-    lons = np.array([i * 0.001 for i in range(11)])
-    local = np.nonzero(simplify_line_np(lats, lons, 100.0))[0].tolist()
-    assert kept_small == local
-    with pytest.raises(ValueError):
-        simplify_ways(df, -1.0)
