@@ -2,14 +2,13 @@
 
 NOT part of the driver contract — bench.py stays the frozen measured
 surface.  This file exists to (a) time individual declared queries in
-isolation with the noop sink, (b) capture .explain("formatted") plans
-to plans/r06/, and (c) time the e2e pipeline stages, all at an
-arbitrary sf dir.
+isolation with the noop sink and (b) capture .explain("formatted") plans
+to plans/r06/, both at an arbitrary sf dir.  Pipeline stage timings come
+from ``python3 perfbench/run.py --trace 1``.
 
 Usage:
   python bench_extra.py --queries ngram_jaccard,dup_shingles --sf /root/testdata/sf1.0 --passes 3
   python bench_extra.py --plans ngram_jaccard --sf /root/testdata/sf1.0 --tag before
-  python bench_extra.py --pipeline --sf /root/testdata/sf1.0
 """
 
 from __future__ import annotations
@@ -50,7 +49,6 @@ def main():
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--pipeline", action="store_true")
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -86,26 +84,6 @@ def main():
             out[name] = {"median": round(_median(ts), 3), "runs": ts}
             print(f"{name}: median {out[name]['median']}s  runs {ts}", flush=True)
         print("RESULT " + json.dumps({k: v["median"] for k, v in out.items()}))
-
-    if args.pipeline:
-        import bench
-
-        n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_N", "0"))
-        if not n_pages:
-            import duckdb
-
-            n_pages = duckdb.sql(
-                f"SELECT count(*) FROM '{args.sf}/lineitem.parquet'"
-            ).fetchone()[0]
-        pp, op = bench.ensure_bench_tables(spark, int(n_pages))
-        bench.run_pipeline(spark, pp, op)  # warmup
-        walls = []
-        for _ in range(args.passes):
-            res = bench.run_pipeline(spark, pp, op)
-            walls.append(round(res["wall_sec"], 2))
-            print(f"pipeline: {res['wall_sec']:.2f}s stages={res['stage_walls']} "
-                  f"phases={res['match_phases']}", flush=True)
-        print("RESULT " + json.dumps({"pipeline_median": _median(walls), "runs": walls}))
 
     spark.stop()
 

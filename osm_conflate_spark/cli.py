@@ -39,7 +39,6 @@ def main(argv=None) -> None:
     ap.add_argument("--dataset-id", default="test")
     ap.add_argument("--max-distance", type=float, default=100.0)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--broadcast-osm", action="store_true")
     ap.add_argument(
         "--conf", action="append", default=[], metavar="K=V",
         help="extra session conf (repeatable) — e.g. the Iceberg catalog "
@@ -75,7 +74,7 @@ def main(argv=None) -> None:
         )
     audit = spark.read.parquet(args.audit) if args.audit else None
 
-    res = pipe.run(ds, osm, audit=audit, broadcast_osm=args.broadcast_osm)
+    res = pipe.run(ds, osm, audit=audit)
     for name in ("changes", "tiles", "osc", "geojson"):
         res[name].write.mode("overwrite").parquet(f"{args.out}/{name}_out")
     metrics = {r["action"]: r["count"] for r in res["metrics"].collect()}

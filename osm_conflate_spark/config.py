@@ -68,7 +68,9 @@ class ConflateConfig:
     # --- engine-only knobs -------------------------------------------------
     #: matched nodes farther than this from the dataset point are moved (X3)
     position_tolerance: float = 0.1
-    #: spatial grid cell size in meters; must be >= max_distance (S1)
+    #: spatial grid cell size in meters (S1) — a floor: ``__post_init__``
+    #: raises it to the widest match radius in play (``max_distance`` and
+    #: every category override), so k-ring-1 stays neighbor-complete
     cell_m: float = 200.0
     #: super-block edge in cells for the match kernel grouping (§8.4)
     block_cells: int = 32
@@ -81,12 +83,11 @@ class ConflateConfig:
     salt_cap_pairs: int = 1_000_000
     #: D2 dup graphs up to this many pairs resolve on the driver
     #: (sequential scan, exact); bigger graphs take the distributed
-    #: fixpoint.  0 forces the distributed path (driver-contract query)
+    #: fixpoint.  The only D2 driver cap; 0 forces the distributed path
+    #: (driver-contract query)
     dedup_driver_max_pairs: int = 500_000
     #: z level for the raster summary tile layer (X8)
     tile_zoom: int = 12
-    #: max outer rounds of the distributed greedy fixed point (safety valve)
-    max_match_rounds: int = 64
 
     @property
     def ref_key(self) -> str:
@@ -128,19 +129,12 @@ class ConflateConfig:
         return dict(self.transform)
 
     def __post_init__(self) -> None:
-        if self.cell_m < self.max_distance:
-            raise ValueError(
-                f"cell_m ({self.cell_m}) must be >= max_distance "
-                f"({self.max_distance}) for k-ring-1 neighbor completeness"
-            )
         if self.duplicate_distance > self.max_distance:
             raise ValueError("duplicate_distance must be <= max_distance")
-        for cat, r in self.category_radii.items():
-            if r > self.cell_m:
-                raise ValueError(
-                    f"category {cat!r} max_distance ({r}) exceeds cell_m "
-                    f"({self.cell_m}) — k-ring-1 would miss candidates"
-                )
+        # SURVEY §8.3: cell height = max(cell_m, radius) — k-ring-1 sees
+        # every pair within the widest radius in play
+        widest = max([self.max_distance, *self.category_radii.values()])
+        object.__setattr__(self, "cell_m", max(self.cell_m, widest))
 
 
 DEFAULT_CONFIG = ConflateConfig()

@@ -19,6 +19,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -30,6 +31,7 @@ __all__ = [
     "M_PER_DEG",
     "distance_col",
     "distance_np",
+    "distance_udf",
     "cell_col",
     "cell_np",
     "kring_col",
@@ -56,6 +58,18 @@ def distance_np(lat1, lon1, lat2, lon2):
     dx = np.radians(lon1 - lon2) * np.cos(0.5 * np.radians(lat1 + lat2))
     dy = np.radians(lat1 - lat2)
     return EARTH_R * np.sqrt(dx * dx + dy * dy)
+
+
+def distance_udf(lat1: str, lon1: str, lat2: str, lon2: str) -> Column:
+    """:func:`distance_np` as an Arrow-batched pandas UDF column — the
+    authoritative value at the radius cut; the JVM twin only prefilters."""
+
+    @F.pandas_udf("double")
+    def _dist(lat1: pd.Series, lon1: pd.Series,
+              lat2: pd.Series, lon2: pd.Series) -> pd.Series:
+        return pd.Series(distance_np(lat1, lon1, lat2, lon2))
+
+    return _dist(lat1, lon1, lat2, lon2)
 
 
 # ---------------------------------------------------------------------------

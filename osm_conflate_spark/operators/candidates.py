@@ -11,8 +11,9 @@ SURVEY §5.2 "explode one side only").
 
 Scale notes (100 TB thinking):
 * the join is a plain shuffle hash/sort-merge equi-join on ``cell`` —
-  AQE handles skewed cells; when the OSM side is small the caller can
-  pass ``broadcast_osm=True``;
+  AQE handles skewed cells; the session broadcasts the OSM side by its
+  measured size (``autoBroadcastJoinThreshold``, 10m) and AQE re-plans
+  the join from runtime stats;
 * only 5 slim columns per side survive into the join (ids + coords) —
   tags/html never enter this exchange;
 * the distance filter runs JVM-side with a +1e-6 m slack; the match
@@ -22,13 +23,12 @@ Scale notes (100 TB thinking):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ConflateConfig
 from ..functions import geo, sqlgen
-from ..functions.geo import distance_np
+from ..functions.geo import distance_udf
 
 # slack added to the JVM-side prefilter; the numpy kernel applies the
 # exact `<= max_distance` cut
@@ -42,12 +42,7 @@ def with_osm_pk(osm: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    ds: DataFrame,
-    osm: DataFrame,
-    cfg: ConflateConfig,
-    broadcast_osm: bool = False,
-) -> DataFrame:
+def candidate_pairs(ds: DataFrame, osm: DataFrame, cfg: ConflateConfig) -> DataFrame:
     """(dataset_id, osm_pk, ds_lat, ds_lon, osm_lat, osm_lon, dist_pre,
     ds_cell, radius_eff).
 
@@ -56,8 +51,8 @@ def candidate_pairs(
     ``radius_eff`` is the per-pair match radius: the dataset point's
     category ``max_distance`` override (F3) when one exists, else
     ``cfg.max_distance``.  With no overrides it folds to a constant and
-    the plan is unchanged.  Config validates every override <= cell_m,
-    so k-ring-1 completeness holds for the widest radius in play.
+    the plan is unchanged.  Config raises cell_m to the widest radius in
+    play, so k-ring-1 completeness holds for every override.
     """
     radii = cfg.category_radii
     use_cat = bool(radii) and "category" in ds.columns
@@ -88,8 +83,6 @@ def candidate_pairs(
         )
         .withColumn("cell", geo.cell_col("osm_lat", "osm_lon", cfg.cell_m))
     )
-    if broadcast_osm:
-        osm_slim = F.broadcast(osm_slim)
     dist_pre = F.expr(
         sqlgen.distance_sql("ds_lat", "ds_lon", "osm_lat", "osm_lon")
     ).alias("dist_pre")
@@ -103,10 +96,12 @@ def candidate_pairs(
     )
 
 
-def self_pairs(
-    ds: DataFrame, cfg: ConflateConfig, radius: float,
-    prefilter_max_cells: int = 20_000_000,
-) -> DataFrame:
+# above this many distinct occupied cells the D2 occupancy table is too
+# big to broadcast
+_PREFILTER_MAX_CELLS = 20_000_000
+
+
+def self_pairs(ds: DataFrame, cfg: ConflateConfig, radius: float) -> DataFrame:
     """Dataset self-join pairs strictly within ``radius`` (for D2).
 
     Emits each unordered pair once, oriented (small_id, big_id).
@@ -122,7 +117,7 @@ def self_pairs(
     map-side; only points with a neighbor (sum > 1) enter the pair
     self-join.  This removes the full-dataset shuffle the round-1 plan
     paid — the exploded k-ring rows never leave their input partition.
-    Above ``prefilter_max_cells`` distinct occupied cells the count
+    Above ``_PREFILTER_MAX_CELLS`` distinct occupied cells the count
     table is too big to broadcast; the k-ring sum then falls back to a
     shuffle join over the SLIM (id, kcell) projection, which still
     keeps full rows out of the pair self-join.
@@ -135,7 +130,7 @@ def self_pairs(
     cnt = base.groupBy("cell").count()
     n_cells = cnt.count()
     cnt_k = cnt.withColumnRenamed("cell", "kcell")
-    if n_cells <= prefilter_max_cells:
+    if n_cells <= _PREFILTER_MAX_CELLS:
         # small enough to broadcast: the k-ring sum is entirely map-side
         cnt_k = F.broadcast(cnt_k)
     # else: plain shuffle join on the SLIM (id, kcell) projection — still
@@ -185,13 +180,8 @@ def self_pairs(
     # JVM prefilter's +1e-6 m slack must not admit boundary pairs the
     # sequential oracle rejects.  Arrow-batched, and only over the already
     # radius-prefiltered (tiny) pair set.
-    @F.pandas_udf("double")
-    def _dist(a_lat: pd.Series, a_lon: pd.Series,
-              b_lat: pd.Series, b_lon: pd.Series) -> pd.Series:
-        return pd.Series(distance_np(a_lat, a_lon, b_lat, b_lon))
-
     return (
-        pre.withColumn("dist", _dist("a_lat", "a_lon", "b_lat", "b_lon"))
+        pre.withColumn("dist", distance_udf("a_lat", "a_lon", "b_lat", "b_lon"))
         .where(F.col("dist") < F.lit(radius))
         .select("a_id", "b_id", F.col("dist").alias("dist_pre"))
     )

@@ -42,7 +42,8 @@ Distributed design (exactness proof sketch in comments):
   Correctness is unaffected because splitting only increases the
   "shared" set, never breaks the all-pairs-of-one-dataset-point
   invariant.  Granularity floor: one CELL above the cap can't split
-  further — at that density, shrink cfg.cell_m.
+  further — at that density, lower cfg.cell_m (never below the widest
+  match radius, which config enforces as its floor).
 
 Everything inside the kernel is vectorized numpy (factorize + lexsort +
 ``np.minimum.at`` rounds); there is no per-row Python anywhere.
@@ -59,7 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import ConflateConfig
-from ..functions.geo import distance_np
+from ..functions.geo import distance_udf
 from ..functions.sqlgen import CELL_SHIFT
 
 _KERNEL_SCHEMA = T.StructType(
@@ -74,6 +75,9 @@ _KERNEL_SCHEMA = T.StructType(
 )
 
 _MAX_INNER_ROUNDS = 256
+# outer rounds of the distributed greedy fixed point (safety valve:
+# running out raises rather than return a partial matching)
+_MAX_MATCH_ROUNDS = 64
 
 
 def _block_col(cfg: ConflateConfig):
@@ -217,14 +221,10 @@ def _exact_dist(pairs: DataFrame) -> DataFrame:
     """Recompute distance in numpy (Arrow-vectorized) and apply the exact
     per-pair cutoff ``radius_eff`` (F3 category overrides), so the
     kernel/oracle metric is authoritative (SURVEY §8.5)."""
-
-    @F.pandas_udf("double")
-    def _dist(ds_lat: pd.Series, ds_lon: pd.Series,
-              osm_lat: pd.Series, osm_lon: pd.Series) -> pd.Series:
-        return pd.Series(distance_np(ds_lat, ds_lon, osm_lat, osm_lon))
-
     return (
-        pairs.withColumn("dist", _dist("ds_lat", "ds_lon", "osm_lat", "osm_lon"))
+        pairs.withColumn(
+            "dist", distance_udf("ds_lat", "ds_lon", "osm_lat", "osm_lon")
+        )
         .where(F.col("dist") <= F.col("radius_eff"))
         .drop("dist_pre")
     )
@@ -394,7 +394,7 @@ def greedy_match(
     # exact for every round, and a fully-killed deferred set breaks out
     # at the bottom of the loop without paying an empty kernel round
     # (round-3 ADVICE #1).
-    for _round in range(cfg.max_match_rounds):
+    for _round in range(_MAX_MATCH_ROUNDS):
         if stats is not None:
             live_per_round.append(n_live)
             stats["live_per_round"] = live_per_round
@@ -509,6 +509,11 @@ def greedy_match(
                 )
             _phase("driver_finish", t0)
             break
+    else:
+        raise RuntimeError(
+            f"greedy_match: {n_live} live pairs remain after "
+            f"{_MAX_MATCH_ROUNDS} rounds"
+        )
 
     if not matched_parts:
         return spark.createDataFrame([], _KERNEL_SCHEMA).drop(

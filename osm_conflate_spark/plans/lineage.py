@@ -77,13 +77,13 @@ class StageRunner:
     """
 
     def __init__(self, spark: SparkSession, out_dir: str | None = None,
-                 cfg_hash: str = "", resume: bool = True,
-                 input_sig: str = ""):
+                 cfg_hash: str = "", resume: bool = True):
         self.spark = spark
         self.out_dir = out_dir
         self.cfg_hash = cfg_hash
         self.resume = resume
-        self.input_sig = input_sig
+        #: input fingerprint; the pipeline sets it per run
+        self.input_sig = ""
         self.lineage: list[dict] = []
 
     def _manifest_path(self, stage: str) -> str:
@@ -94,7 +94,7 @@ class StageRunner:
         assert self.out_dir is not None
         return os.path.join(self.out_dir, stage)
 
-    def run(self, stage: str, build, n_in: int | None = None) -> DataFrame:
+    def run(self, stage: str, build) -> DataFrame:
         """build: () -> DataFrame.  Returns the (possibly restored) stage
         output; when checkpointing, the output is materialized parquet,
         which also truncates the lineage of iterative plans."""
@@ -118,7 +118,7 @@ class StageRunner:
                         file=sys.stderr,
                     )
                     self.lineage.append(
-                        dict(stage=stage, group_id=-1, n_in=n_in or -1,
+                        dict(stage=stage, group_id=-1, n_in=-1,
                              n_out=man["rows"], wall_ms=0.0, resumed=True)
                     )
                     return df
@@ -136,7 +136,7 @@ class StageRunner:
             df = build()
             rows = -1
         self.lineage.append(
-            dict(stage=stage, group_id=-1, n_in=n_in or -1, n_out=rows,
+            dict(stage=stage, group_id=-1, n_in=-1, n_out=rows,
                  wall_ms=(time.monotonic() - t0) * 1000.0, resumed=False)
         )
         return df

@@ -51,10 +51,10 @@ class ConflatePipeline:
 
     # -- individual stages --------------------------------------------------
 
-    def prepare_dataset(self, ds: DataFrame, order_col: str = "url") -> DataFrame:
+    def prepare_dataset(self, ds: DataFrame) -> DataFrame:
         cfg = self.cfg
-        if order_col in ds.columns:
-            ds = ref_dedup(ds, order_col)
+        if "url" in ds.columns:
+            ds = ref_dedup(ds, "url")
         else:
             ds = ref_dedup(ds.withColumn("_ord", F.col("id")), "_ord").drop("_ord")
         ds = ds.withColumn("tags", tagfns.normalize_tags("tags"))
@@ -76,22 +76,19 @@ class ConflatePipeline:
         ds: DataFrame,
         osm_pk_df: DataFrame,
         audit: DataFrame | None = None,
-        broadcast_osm: bool = False,
     ) -> tuple[DataFrame, DataFrame]:
         """Returns (matched_pairs, vicinity), both from one pair table."""
         self.last_match_stats = {}
-        pairs = self.prepared_pairs(ds, osm_pk_df, broadcast_osm)
+        pairs = self.prepared_pairs(ds, osm_pk_df)
         return self.match_pairs(pairs, ds, osm_pk_df, audit), _vicinity(pairs)
 
-    def prepared_pairs(
-        self, ds: DataFrame, osm_pk_df: DataFrame, broadcast_osm: bool = False
-    ) -> DataFrame:
+    def prepared_pairs(self, ds: DataFrame, osm_pk_df: DataFrame) -> DataFrame:
         """J1 candidates -> the prepared pair table (dataset_id, osm_pk,
         dist, block, ds_cell), eagerly checkpointed: the ONE
         materialization that serves the vicinity set, the audit skip and
         the matcher."""
         t0 = time.monotonic()
-        pairs = candidate_pairs(ds, osm_pk_df, self.cfg, broadcast_osm=broadcast_osm)
+        pairs = candidate_pairs(ds, osm_pk_df, self.cfg)
         pairs = prepare_pairs(pairs, self.cfg).localCheckpoint(eager=True)
         self.last_match_stats.setdefault("phase_wall", {})["prepare_pairs"] = (
             time.monotonic() - t0
@@ -154,7 +151,6 @@ class ConflatePipeline:
         ds_raw: DataFrame,
         osm_raw: DataFrame,
         audit: DataFrame | None = None,
-        broadcast_osm: bool = False,
     ) -> dict:
         r = self.runner
         self.last_match_stats = {}
@@ -170,9 +166,7 @@ class ConflatePipeline:
             osm = osm.localCheckpoint(eager=True)
         # built on first use, at most once: a stage restored from its
         # checkpoint never asks, so a full resume runs no candidate join
-        pairs = functools.cache(
-            lambda: self.prepared_pairs(ds, osm, broadcast_osm)
-        )
+        pairs = functools.cache(lambda: self.prepared_pairs(ds, osm))
         matched = r.run(
             "match", lambda: self.match_pairs(pairs(), ds, osm, audit)
         )

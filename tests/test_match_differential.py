@@ -56,6 +56,20 @@ def test_random_world(spark, seed):
     assert {"modify", "create", "delete"} <= actions
 
 
+def test_radius_above_default_cell(spark):
+    """max_distance 250 m > the 200 m default cell: config widens the
+    grid to the radius instead of rejecting it, and the engine still
+    equals the oracle."""
+    ds = gen_dataset(200, seed=11)
+    osm = gen_osm(ds, seed=12, max_distance=250.0)
+    cfg = ConflateConfig(max_distance=250.0)
+    assert cfg.cell_m == 250.0
+    res_o, res_s = run_both(spark, ds, osm, cfg)
+    assert_equal_results(res_o, res_s)
+    # the oracle matches pairs a 200 m grid would not guarantee
+    assert max(m["dist"] for m in res_o["matched_pairs"]) > 200.0
+
+
 def test_case_h_cross_cell_borders(spark):
     """Clusters straddling cell boundaries: points +-1 m around grid
     lines — exercises k-ring completeness + block conflict resolution."""

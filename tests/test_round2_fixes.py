@@ -8,6 +8,8 @@
   unconditionally BEFORE the size check).
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -151,16 +153,26 @@ def test_spatial_dedup_driver_path(spark):
 
 
 def test_spatial_dedup_distributed_path_matches_driver(spark):
-    """driver_max_pairs=0 forces the distributed fixpoint (the path that
-    protects the driver from adversarial dup volumes) — must produce the
-    exact same keep set."""
+    """dedup_driver_max_pairs=0 forces the distributed fixpoint (the path
+    that protects the driver from adversarial dup volumes) — must produce
+    the exact same keep set."""
     ds = _dup_ds(spark)
-    cfg = ConflateConfig(duplicate_distance=1.0)
-    keep = sorted(
-        r["id"]
-        for r in dd.spatial_dedup(ds, cfg, driver_max_pairs=0).collect()
+    cfg = dataclasses.replace(
+        ConflateConfig(duplicate_distance=1.0), dedup_driver_max_pairs=0
     )
+    keep = sorted(r["id"] for r in dd.spatial_dedup(ds, cfg).collect())
     assert keep == _EXPECTED_KEEP
+
+
+def test_spatial_dedup_round_cap_raises(spark, monkeypatch):
+    """The c000..c006 chain needs 3 fixpoint rounds; with the cap at 1
+    edges remain, and the fixpoint must raise instead of keeping the
+    undecided c003 and c005."""
+    monkeypatch.setattr(dd, "_MAX_DEDUP_ROUNDS", 1)
+    ds = _dup_ds(spark)
+    cfg = ConflateConfig(duplicate_distance=1.0, dedup_driver_max_pairs=0)
+    with pytest.raises(RuntimeError, match="dup edges remain"):
+        dd.spatial_dedup(ds, cfg)
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@
 """
 
 import pandas as pd
+import pytest
 
 from osm_conflate_spark.config import ConflateConfig
 from osm_conflate_spark.operators import match as match_mod
@@ -62,18 +63,14 @@ def test_fully_killed_deferred_set_ends_loop(spark, monkeypatch):
     assert all(g["round"] == 0 for g in stats["groups"]), stats["groups"]
 
 
-def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
-    """Same fixture with the driver finish enabled and an extra
-    unkillable deferred pair: the finish consumes the POST-kill survivor
-    set (B's killed pair gone, C's survivor matched) in one checkpoint
-    scan."""
-    monkeypatch.setattr(match_mod, "_DRIVER_FINISH_MAX", 10)
+def _post_kill_survivor_pairs(spark):
+    """Round 0 leaves exactly one live pair after the cross-block kill."""
     b0, b1 = _two_partition_blocks(spark)
     # node/1: matched by A in b0, B's deferred pair killed cross-block.
     # node/2: its gmin pair (C, 3.0) dies IN-block because C grabs the
     # closer unshared node/3 first, so C2's deferred pair survives the
-    # kill and must be finished on the driver.
-    pairs = spark.createDataFrame(
+    # kill and must be matched in a later round.
+    return spark.createDataFrame(
         pd.DataFrame(
             {
                 "dataset_id": ["A", "B", "C", "C", "C2"],
@@ -86,6 +83,15 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
             }
         )
     )
+
+
+def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
+    """Same fixture with the driver finish enabled and an extra
+    unkillable deferred pair: the finish consumes the POST-kill survivor
+    set (B's killed pair gone, C's survivor matched) in one checkpoint
+    scan."""
+    monkeypatch.setattr(match_mod, "_DRIVER_FINISH_MAX", 10)
+    pairs = _post_kill_survivor_pairs(spark)
     stats: dict = {}
     out = greedy_match(spark, pairs, ConflateConfig(), stats=stats)
     got = {(r["dataset_id"], r["osm_pk"]) for r in out.collect()}
@@ -94,6 +100,16 @@ def test_driver_finish_sees_post_kill_set(spark, monkeypatch):
     # killed pair never re-enters
     assert stats["rounds"] == 2, stats
     assert stats["live_per_round"] == [5, 1], stats
+
+
+def test_match_round_cap_raises(spark, monkeypatch):
+    """Live pairs left when the outer rounds run out: greedy_match must
+    raise instead of returning the partial matching of round 0."""
+    monkeypatch.setattr(match_mod, "_DRIVER_FINISH_MAX", 0)
+    monkeypatch.setattr(match_mod, "_MAX_MATCH_ROUNDS", 1)
+    pairs = _post_kill_survivor_pairs(spark)
+    with pytest.raises(RuntimeError, match="live pairs remain"):
+        greedy_match(spark, pairs, ConflateConfig())
 
 
 def test_dup_shingle_hot_escape_matches_window_path(spark):
