@@ -6,9 +6,10 @@ Usage:
       [--audit audit.parquet] [--max-distance 100] [--resume]
 
 Mirrors the reference CLI surface (``conflate <profile> -i data -o osc``,
-SURVEY §4 E1): input dataset (here: the pages table), OSM side, output
-directory receiving changes/osc/geojson/tiles/metrics/lineage parquet, an
-optional audit table, and checkpoint-resumable stages.
+SURVEY §4 E1): input dataset (here: the pages table), OSM side (parquet,
+catalog table or ``.osm`` XML), output directory receiving
+changes/osc/geojson/tiles/metrics/lineage parquet, an optional audit
+table, and checkpoint-resumable stages.
 """
 
 from __future__ import annotations
@@ -30,7 +31,11 @@ def main(argv=None) -> None:
         "Iceberg table 'ice.db.pages' (url, warc_ts, html, text, lang)",
     )
     ap.add_argument("--dataset", help="pre-extracted dataset_points parquet/table")
-    ap.add_argument("--osm", required=True, help="osm_points parquet/table")
+    ap.add_argument(
+        "--osm", required=True,
+        help="osm_points parquet path OR catalog table name, or an "
+        "OSM/Overpass XML file ending in .osm (e.g. saved.osm)",
+    )
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument(
         "--audit",

@@ -59,7 +59,7 @@ def input_fingerprint(*dfs) -> str:
     for df in dfs:
         try:
             files.extend(df.inputFiles())
-        except Exception:  # noqa: BLE001 — streaming/in-memory frames
+        except Exception:  # noqa: BLE001 — frames with no file listing
             pass
     if not files:
         return ""

@@ -216,6 +216,15 @@ def _tmpfs_has_headroom(path: str, min_free: int = _TMPFS_MIN_FREE_BYTES) -> boo
     return st.f_bavail * st.f_frsize >= min_free
 
 
+def _half_physical_memory() -> str:
+    """Default driver heap: half the machine's physical memory, in whole
+    GB (at least 1g)."""
+    import os
+
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 // 2**30)}g"
+
+
 def build_session(
     app: str = "osm-conflate-spark",
     master: str | None = None,
@@ -224,7 +233,9 @@ def build_session(
 ) -> SparkSession:
     """Opinionated local session: AQE on, Arrow on, sane local shuffle
     width.  On a real cluster, spark-submit conf wins — we only set
-    semantics-relevant options."""
+    semantics-relevant options.  Sized from the machine by default: all
+    cores (``local[*]``) and half the physical memory as driver heap;
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override either."""
     import os
 
     # executor python workers inherit PYTHONPATH from the JVM process env,
@@ -243,7 +254,7 @@ def build_session(
     if master:
         b = b.master(master)
     elif not os.environ.get("SPARK_MASTER"):
-        b = b.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        b = b.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     # local/bench runs: put shuffle + block spill on tmpfs when present —
@@ -298,7 +309,10 @@ def build_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _half_physical_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

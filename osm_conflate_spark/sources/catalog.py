@@ -26,10 +26,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .osm_xml import read_osm_xml
+
 
 def looks_like_path(ref: str) -> bool:
-    """Paths contain a separator, a scheme, or exist on disk; anything
-    else is treated as a catalog table name (``cat.db.table``).
+    """Paths contain a separator, a scheme, a ``.parquet``/``.osm``
+    suffix, or exist on disk; anything else is treated as a catalog table
+    name (``cat.db.table``).
 
     Dotted multi-part names win over the filesystem-existence fallback:
     ``cat.db.pages`` is a table even if a file of that name happens to
@@ -37,7 +40,7 @@ def looks_like_path(ref: str) -> bool:
     single-part names).  Callers can force either side with the explicit
     ``table:`` / ``path:`` prefixes handled by :func:`read_input`.
     """
-    if "/" in ref or ref.endswith(".parquet") or "://" in ref:
+    if "/" in ref or ref.endswith((".parquet", ".osm")) or "://" in ref:
         return True
     if "." in ref:  # dotted name => catalog reference, never a CWD file
         return False
@@ -45,18 +48,29 @@ def looks_like_path(ref: str) -> bool:
 
 
 def read_input(spark: SparkSession, ref: str) -> DataFrame:
-    """Read a pipeline input from a parquet path OR a catalog table.
+    """Read a pipeline input from a parquet path, an OSM XML file or a
+    catalog table.
 
+    A path ending in ``.osm`` is OSM/Overpass XML (the reference's
+    ``--osm saved.osm``), parsed to osm_points rows by
+    :func:`osm_xml.read_osm_xml`, one document per file.
     ``table:cat.db.pages`` / ``path:some/dir`` prefixes override the
     heuristic dispatch entirely.
     """
     if ref.startswith("table:"):
         return spark.read.table(ref[len("table:"):])
     if ref.startswith("path:"):
-        return spark.read.parquet(ref[len("path:"):])
+        return _read_path(spark, ref[len("path:"):])
     if looks_like_path(ref):
-        return spark.read.parquet(ref)
+        return _read_path(spark, ref)
     return spark.read.table(ref)
+
+
+def _read_path(spark: SparkSession, path: str) -> DataFrame:
+    if path.endswith(".osm"):
+        docs = spark.read.text(path, wholetext=True)
+        return read_osm_xml(docs, xml_col="value")
+    return spark.read.parquet(path)
 
 
 def iceberg_session_conf(

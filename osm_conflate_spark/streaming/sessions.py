@@ -1,29 +1,13 @@
-"""Gap-based sessionization of the events stream.
+"""Gap-based sessionization of the events table.
 
-Batch twin (:func:`sessionize`): classic lag/cumsum session assignment —
-two window passes + one aggregate, all JVM-side; this is the shape the
-DuckDB driver oracle replays.
-
-Streaming (:func:`sessionize_stream`): a CUSTOM STATEFUL operator via
-``applyInPandasWithState`` — per-user open-session state, sessions
-closed by the gap rule are emitted as soon as the closing event arrives,
-idle sessions are flushed by an event-time timeout once the watermark
-passes (bounded state: one open session per active user, expired by
-watermark — required at stream scale).  Late-data rule: out-of-order
-events still above the watermark fold into the open session (in-gap
-merge, start may move back); events at or below the watermark are
-DROPPED inside the state function (Spark does not pre-filter input rows
-for this operator, so the drop is enforced explicitly — otherwise a
-years-late event would corrupt whatever session is currently open).
-
-The per-group merge logic lives in a pure-pandas kernel
-(:func:`merge_session_batch`) so it is unit-testable without a running
-stream and Arrow-vectorized inside the state function.
+:func:`sessionize` is the classic lag/cumsum session assignment: two
+window passes and one aggregate, all JVM-side.  This is the shape the
+DuckDB driver oracle replays for the ``event_sessions`` query.  The
+module stays under ``streaming/`` because the driver contract imports
+``sessionize`` from this path.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,18 +15,6 @@ from pyspark.sql.window import Window
 
 DEFAULT_GAP_SECONDS = 1800
 
-SESSION_SCHEMA = (
-    "user_id long, session_start long, session_end long, "
-    "n_events long, total_value double"
-)
-_STATE_SCHEMA = (
-    "session_start long, session_end long, n_events long, total_value double"
-)
-
-
-# ---------------------------------------------------------------------------
-# batch twin
-# ---------------------------------------------------------------------------
 
 def sessionize(
     events: DataFrame, gap_seconds: int = DEFAULT_GAP_SECONDS
@@ -69,115 +41,4 @@ def sessionize(
         F.round(F.sum("value"), 6).alias("total_value"),
     ).select(
         "user_id", "session_start", "session_end", "n_events", "total_value"
-    )
-
-
-# ---------------------------------------------------------------------------
-# streaming: applyInPandasWithState
-# ---------------------------------------------------------------------------
-
-def merge_session_batch(
-    open_session: tuple | None, ep: pd.Series, value: pd.Series,
-    gap_seconds: int,
-):
-    """Merge one user's micro-batch into the open session.
-
-    ``open_session`` is (start, end, n, total) or None; ``ep`` epoch
-    seconds (any order — sorted here).  Returns
-    ``(closed_sessions, new_open)`` where closed_sessions is a list of
-    (start, end, n, total) tuples closed by the gap rule, and new_open
-    is the still-open trailing session.
-    """
-    order = ep.sort_values(kind="mergesort").index
-    closed: list[tuple] = []
-    cur = open_session
-    for i in order:
-        t, v = int(ep[i]), float(value[i])
-        if cur is None:
-            cur = (t, t, 1, v)
-        elif t - cur[1] > gap_seconds:
-            closed.append(cur)
-            cur = (t, t, 1, v)
-        else:
-            # late rows inside the gap fold in (start may move back)
-            cur = (min(cur[0], t), max(cur[1], t), cur[2] + 1, cur[3] + v)
-    return closed, cur
-
-
-def _make_session_state_fn(gap_seconds: int):
-    def fn(key, pdf_iter, state):
-        user_id = key[0]
-        out = []
-        if state.hasTimedOut:
-            if state.exists:
-                s = tuple(state.get)
-                out.append(s)
-                state.remove()
-        else:
-            cur = tuple(state.get) if state.exists else None
-            # Spark does NOT pre-filter below-watermark rows for
-            # applyInPandasWithState (verified empirically on 4.x) — a
-            # years-late event would otherwise fold into whatever
-            # session happens to be open and silently corrupt it.  So
-            # the watermark drop is enforced HERE, explicitly: rows at
-            # or below the current watermark are discarded, matching
-            # the documented append-mode late-data rule.
-            wm_ms = state.getCurrentWatermarkMs()
-            for pdf in pdf_iter:
-                ep = (
-                    pdf["ts"].astype("datetime64[ns]").astype("int64")
-                    // 1_000_000_000
-                )
-                if wm_ms > 0:
-                    keep = ep * 1000 > wm_ms
-                    if not keep.all():
-                        pdf = pdf[keep]
-                        ep = ep[keep]
-                if not len(pdf):
-                    continue
-                closed, cur = merge_session_batch(
-                    cur, pd.Series(ep), pdf["value"], gap_seconds
-                )
-                out.extend(closed)
-            if cur is not None:
-                state.update(cur)
-                # flush once the watermark passes the session's gap window
-                state.setTimeoutTimestamp(
-                    (cur[1] + gap_seconds) * 1000 + 1
-                )
-        if out:
-            yield pd.DataFrame(
-                [
-                    dict(
-                        user_id=user_id, session_start=s[0], session_end=s[1],
-                        n_events=s[2], total_value=round(s[3], 6),
-                    )
-                    for s in out
-                ]
-            )
-
-    return fn
-
-
-def sessionize_stream(
-    events: DataFrame,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization with per-user state and event-time
-    timeout flush.  Emits each session exactly once: either when a
-    later event of the same user closes it (gap rule) or when the
-    watermark passes ``session_end + gap`` (timeout)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_session_state_fn(gap_seconds),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )

@@ -1,14 +1,12 @@
-"""J3 match-predicate hook, J7 moveability, streaming pages ingest."""
+"""J3 match-predicate hook, J7 moveability."""
 
 from pyspark.sql import functions as F
 
 from osm_conflate_spark.config import ConflateConfig
 from osm_conflate_spark import reference_model as rm
-from osm_conflate_spark.gen import gen_dataset, gen_osm, gen_pages
+from osm_conflate_spark.gen import gen_dataset, gen_osm
 from osm_conflate_spark.operators.changes import moveability
 from osm_conflate_spark.plans.pipeline import ConflatePipeline
-from osm_conflate_spark.sources.dataset import from_pages
-from osm_conflate_spark.streaming import events as stv
 
 from helpers import (
     ds_to_oracle, ds_to_spark, matched_set_oracle, matched_set_spark,
@@ -57,22 +55,6 @@ def test_j7_moveability(spark):
     # without a membership table: NULL (documented gap)
     rows2 = {r["osm_id"]: r["can_move"] for r in moveability(changes, None).collect()}
     assert all(v is None for v in rows2.values())
-
-
-def test_streaming_pages_extract(spark, tmp_path):
-    ds = gen_dataset(40, seed=61, dup_id_frac=0, spatial_dup_frac=0)
-    pages = gen_pages(ds, seed=61)
-    p = str(tmp_path / "pages")
-    spark.createDataFrame(
-        pages[["url", "warc_ts", "html", "lang"]],
-        schema=stv.PAGES_SCHEMA,
-    ).repartition(4).write.parquet(p)
-    stream = stv.read_pages_stream(spark, p, max_files_per_trigger=2)
-    extracted = from_pages(stream)
-    assert extracted.isStreaming
-    stv.run_to_memory_sink(extracted, "pg")
-    got = {r["id"] for r in spark.sql("SELECT id FROM pg").collect()}
-    assert got == set(ds["id"])
 
 
 def test_f3_category_radius_override(spark):

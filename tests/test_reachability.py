@@ -16,12 +16,6 @@ ENTRY_POINTS = [
     os.path.join(ROOT, p) for p in ("__spark_entry__.py", f"{PKG}/cli.py", "bench.py")
 ] + sorted(glob.glob(f"{ROOT}/perfbench/*.py"))
 
-# Unreached on purpose, one reason each.
-ALLOWED_UNREACHED = {
-    f"{PKG}.sources.osm_xml": "the reference's .osm XML input; kept for parity",
-    f"{PKG}.streaming.events": "streaming rollup/dedup, outside the batch entry points",
-}
-
 
 def _module_file(name):
     base = os.path.join(ROOT, *name.split("."))
@@ -76,6 +70,5 @@ def test_every_package_module_is_reached():
         _module_name(p)
         for p in glob.glob(f"{ROOT}/{PKG}/**/*.py", recursive=True)
     }
-    assert set(ALLOWED_UNREACHED) <= package, "stale allow-list entry"
-    unreached = package - _reached() - set(ALLOWED_UNREACHED)
+    unreached = package - _reached()
     assert not unreached, sorted(unreached)

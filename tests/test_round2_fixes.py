@@ -226,6 +226,7 @@ def test_read_input_path_or_table(spark, tmp_path):
     df.createOrReplaceTempView("cat_probe_view")
     assert read_input(spark, "cat_probe_view").count() == 1  # name -> table
     assert looks_like_path("s3://bucket/x") and not looks_like_path("ice.db.pages")
+    assert looks_like_path("extract.osm")  # OSM XML in the CWD, not a table
     conf = iceberg_session_conf("ice", "/warehouse")
     assert conf["spark.sql.catalog.ice.warehouse"] == "/warehouse"
     assert "spark.sql.catalog.ice" in conf

@@ -1,6 +1,9 @@
 """Round-3 additions: E2 audit round-trip (SURVEY §4 E2), unbiased IVF
 centroids on clustered ids, config-hash hook-body sensitivity, catalog
-dispatch prefixes, fingerprint NULL parity, tmpfs headroom guard."""
+dispatch prefixes, fingerprint NULL parity, tmpfs headroom guard, driver
+heap sized from the machine."""
+
+import os
 
 import numpy as np
 import pandas as pd
@@ -213,7 +216,6 @@ def test_config_hash_sensitive_to_hook_body():
     # set-valued fields (master_tags) hash the same in every process, so
     # a fresh-process --resume finds its checkpoints: set iteration order
     # follows PYTHONHASHSEED
-    import os
     import subprocess
     import sys
 
@@ -295,27 +297,23 @@ def test_tmpfs_headroom_guard():
     assert not _tmpfs_has_headroom("/dev/shm", min_free=1 << 60)
 
 
+# read at collection, before any fixture can set it
+_LAUNCH_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM")
+
+
+def test_session_heap_sized_from_machine(spark):
+    """Without SPARK_DRIVER_MEM the driver heap is half the physical
+    memory in whole GB, so no box needs a per-machine override."""
+    expect = _LAUNCH_DRIVER_MEM
+    if not expect:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        expect = f"{max(1, phys // 2 // 2**30)}g"
+    assert spark.conf.get("spark.driver.memory") == expect
+
+
 # ---------------------------------------------------------------------------
-# sessionization: pure kernel, batch twin, and the applyInPandasWithState
-# streaming operator (gap close + event-time timeout flush)
+# sessionization: batch lag/cumsum vs a hand-computed oracle
 # ---------------------------------------------------------------------------
-
-def test_merge_session_batch_kernel():
-    from osm_conflate_spark.streaming.sessions import merge_session_batch
-
-    ep = pd.Series([100, 200, 5000, 5100], index=[0, 1, 2, 3])
-    val = pd.Series([1.0, 2.0, 3.0, 4.0], index=[0, 1, 2, 3])
-    closed, cur = merge_session_batch(None, ep, val, gap_seconds=1800)
-    assert closed == [(100, 200, 2, 3.0)]
-    assert cur == (5000, 5100, 2, 7.0)
-    # continuing batch folds into the open session; out-of-order rows
-    # inside the gap move the start back
-    ep2 = pd.Series([4990, 6000])
-    val2 = pd.Series([0.5, 0.25])
-    closed2, cur2 = merge_session_batch(cur, ep2, val2, gap_seconds=1800)
-    assert closed2 == []
-    assert cur2 == (4990, 6000, 4, 7.75)
-
 
 def test_sessionize_batch_matches_pandas_oracle(spark):
     from osm_conflate_spark.streaming.sessions import sessionize
@@ -344,81 +342,6 @@ def test_sessionize_batch_matches_pandas_oracle(spark):
         (1, e("2024-01-01 02:00:00")): (e("2024-01-01 02:00:00"), 1, 3.0),
         (2, e("2024-01-01 05:00:00")): (e("2024-01-01 05:00:00"), 1, 4.0),
     }
-
-
-def test_sessionize_stream_gap_close_and_timeout(spark, tmp_path):
-    """Two micro-batches: batch 2's far-future event for user 1 closes
-    user 1's first session via the GAP rule; the watermark advance also
-    expires user 2's idle session via the event-time TIMEOUT."""
-    import os
-    import time
-
-    from osm_conflate_spark.streaming.sessions import (
-        SESSION_SCHEMA, sessionize_stream,
-    )
-
-    src = str(tmp_path / "events_stream")
-    os.makedirs(src)
-    b1 = pd.DataFrame(
-        dict(
-            event_id=[1, 2, 3],
-            ts=[
-                pd.Timestamp("2024-01-01 00:00:00"),
-                pd.Timestamp("2024-01-01 00:10:00"),
-                pd.Timestamp("2024-01-01 00:01:00"),
-            ],
-            user_id=[1, 1, 2],
-            event_type=["a", "a", "a"],
-            value=[1.0, 2.0, 9.0],
-            props=["", "", ""],
-        )
-    )
-    b2 = pd.DataFrame(
-        dict(
-            event_id=[10],
-            ts=[pd.Timestamp("2024-01-02 00:00:00")],
-            user_id=[1],
-            event_type=["a"],
-            value=[5.0],
-            props=[""],
-        )
-    )
-    spark.createDataFrame(b1).repartition(1).write.parquet(f"{src}/f1")
-    time.sleep(1.1)  # file-source orders batches by modification time
-    spark.createDataFrame(b2).repartition(1).write.parquet(f"{src}/f2")
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_seconds=1800, watermark="1 minute")
-        .writeStream.format("memory")
-        .queryName("sess_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["total_value"]
-        )
-        for r in spark.sql("SELECT * FROM sess_test").collect()
-    }
-    e = lambda t: int(pd.Timestamp(t).timestamp())
-    # user 1 session 1 closed by the gap rule (batch-2 event >gap later)
-    assert got[(1, e("2024-01-01 00:00:00"))] == (
-        e("2024-01-01 00:10:00"), 2, 3.0,
-    )
-    # user 2's idle session flushed by event-time timeout once the
-    # watermark (batch-2 max ts - 1 min) passed end+gap
-    assert got[(2, e("2024-01-01 00:01:00"))] == (
-        e("2024-01-01 00:01:00"), 1, 9.0,
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,7 @@
 
 * the weighted range-cut skew splitter fires before round 0 only;
   deferred rounds keep the split block ids and stay exact;
-* managed-table round-trip through the real ``spark.read.table`` branch;
-* streaming sessionization late/out-of-order robustness vs batch twin.
+* managed-table round-trip through the real ``spark.read.table`` branch.
 """
 
 import numpy as np
@@ -116,113 +115,6 @@ def test_polygon_cover_validates_ring(spark):
         polygon_tile_cover(
             spark, [(86.0, 10.0), (80.0, 20.0), (82.0, 5.0)], 8
         )
-
-
-def test_sessionize_stream_late_and_out_of_order(spark, tmp_path):
-    """Late-data semantics of the streaming sessionizer (round-3 verdict
-    #8), asserted against the batch twin:
-
-    * an out-of-order event that is late but still ABOVE the watermark
-      folds into the open session (``merge_session_batch``'s in-gap
-      fold, sessions.py) — session keeps its original start, count
-      grows;
-    * an event BELOW the watermark is dropped by the EXPLICIT guard
-      inside the state function (sessions.py folds nothing below the
-      watermark; Spark does NOT pre-filter applyInPandasWithState
-      input, so the manual drop is load-bearing) — the closed session
-      equals the batch twin run on the surviving events and differs
-      from the batch twin on all events by exactly the dropped row.
-    """
-    import os
-    import time
-
-    from osm_conflate_spark.streaming.sessions import (
-        sessionize,
-        sessionize_stream,
-    )
-
-    src = str(tmp_path / "ev_late")
-    os.makedirs(src)
-    mk = lambda rows: pd.DataFrame(
-        dict(
-            event_id=[r[0] for r in rows],
-            ts=[pd.Timestamp(r[1]) for r in rows],
-            user_id=[1] * len(rows),
-            event_type=["a"] * len(rows),
-            value=[float(r[2]) for r in rows],
-            props=[""] * len(rows),
-        )
-    )
-    # b1: open session [00:00, 00:40]; watermark after b1 = 00:40 - 30m
-    # = 00:10
-    b1 = mk([(1, "2024-01-01 00:00:00", 1.0), (2, "2024-01-01 00:40:00", 2.0)])
-    # b2: 00:20 is out-of-order but above watermark -> folds in;
-    #     00:05 is below watermark -> dropped before the state fn
-    b2 = mk([(3, "2024-01-01 00:20:00", 4.0), (4, "2024-01-01 00:05:00", 8.0)])
-    # b3: far-future event closes the session via the gap rule
-    b3 = mk([(5, "2024-01-01 06:00:00", 16.0)])
-    for i, b in enumerate((b1, b2, b3)):
-        spark.createDataFrame(b).repartition(1).write.parquet(f"{src}/f{i}")
-        time.sleep(1.1)  # file source orders batches by mtime
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    q = (
-        sessionize_stream(stream, gap_seconds=3600, watermark="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess_late_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = [
-        tuple(r)
-        for r in spark.sql(
-            "SELECT user_id, session_start, session_end, n_events, "
-            "total_value FROM sess_late_test"
-        ).collect()
-    ]
-    ep = lambda t: int(pd.Timestamp(t).timestamp())
-    # closed session: original start kept, late 00:20 folded in (3
-    # events, 1+2+4), dropped 00:05 absent
-    assert got == [(1, ep("2024-01-01 00:00:00"), ep("2024-01-01 00:40:00"),
-                    3, 7.0)]
-    # batch twin on the SURVIVING events matches the stream exactly ...
-    surviving = spark.createDataFrame(
-        pd.concat([b1, b2[b2.event_id == 3], b3]),
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    batch = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["total_value"]
-        )
-        for r in sessionize(surviving, gap_seconds=3600).collect()
-    }
-    assert batch[(1, ep("2024-01-01 00:00:00"))] == (
-        ep("2024-01-01 00:40:00"), 3, 7.0
-    )
-    # ... while the twin on ALL events differs by exactly the dropped row
-    allev = spark.createDataFrame(
-        pd.concat([b1, b2, b3]),
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    batch_all = {
-        (r["user_id"], r["session_start"]): (
-            r["session_end"], r["n_events"], r["total_value"]
-        )
-        for r in sessionize(allev, gap_seconds=3600).collect()
-    }
-    assert batch_all[(1, ep("2024-01-01 00:00:00"))] == (
-        ep("2024-01-01 00:40:00"), 4, 15.0
-    )
 
 
 def test_lloyd_refinement_recall_uplift(spark):

@@ -1,25 +1,19 @@
-"""Tests: OSM XML ingest SRC5, CSV/JSON dataset readers SRC2, streaming
-rollup/dedup (batch == streaming results), CLI end-to-end, audit J6 in
-the Spark engine, osc/geojson structure."""
+"""Tests: OSM XML ingest SRC5, CSV/JSON dataset readers SRC2, CLI
+end-to-end (parquet and ``.osm`` XML input), audit J6 in the Spark
+engine, osc/geojson structure."""
 
 import json
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from osm_conflate_spark.config import ConflateConfig
 from osm_conflate_spark import reference_model as rm
-from osm_conflate_spark.gen import gen_dataset, gen_osm, gen_pages
+from osm_conflate_spark.gen import gen_dataset, gen_osm, gen_pages, parse_tags_raw
 from osm_conflate_spark.plans.pipeline import ConflatePipeline
 from osm_conflate_spark.sources import dataset as src_ds
 from osm_conflate_spark.sources.osm_xml import read_osm_xml
-from osm_conflate_spark.streaming import events as stv
 
 from helpers import ds_to_oracle, ds_to_spark, osm_to_oracle, osm_to_spark, \
     changes_set_oracle, changes_set_spark
-
-SF = "/root/testdata/sf0.001"
 
 OSM_XML = """<?xml version='1.0'?>
 <osm version="0.6">
@@ -74,29 +68,6 @@ def test_from_pages_matches_generator(spark):
         assert abs(got[ds["id"].iloc[i]]["lat"] - ds["lat"].iloc[i]) < 1e-12
 
 
-def test_streaming_equals_batch(spark, tmp_path):
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    stream_dir = str(tmp_path / "ev")
-    events.repartition(4).write.parquet(stream_dir)
-
-    batch = {(r["hour_epoch"], r["event_type"], r["n"], r["total"])
-             for r in stv.hourly_rollup(events).collect()}
-    stream = stv.read_events_stream(spark, stream_dir)
-    # complete mode keeps all window state, so the drained stream must
-    # equal the batch aggregate exactly (append mode would only emit
-    # windows the watermark has closed — bounded-state semantics)
-    stv.run_to_memory_sink(
-        stv.hourly_rollup(stream), "hr", output_mode="complete"
-    )
-    got = {(r["hour_epoch"], r["event_type"], r["n"], r["total"])
-           for r in spark.sql("SELECT * FROM hr").collect()}
-    assert got == batch
-
-    stv.run_to_memory_sink(stv.streaming_dedup(stream), "dd")
-    n = spark.sql("SELECT count(DISTINCT event_id) c FROM dd").collect()[0]["c"]
-    assert n == events.select("event_id").distinct().count()
-
-
 def test_audit_overrides_spark_equals_oracle(spark):
     ds_pdf = gen_dataset(80, seed=21, dup_id_frac=0, spatial_dup_frac=0)
     osm_pdf = gen_osm(ds_pdf, seed=22)
@@ -145,7 +116,9 @@ def test_osc_and_geojson_structure(spark):
         assert f["properties"]["marker_color"].startswith("#")
 
 
-def test_cli_end_to_end(spark, tmp_path):
+def _cli_world(spark, tmp_path):
+    """The 50-point CLI world: pages and OSM parquet paths, and the OSM
+    frame they were written from."""
     ds_pdf = gen_dataset(50, seed=41, dup_id_frac=0, spatial_dup_frac=0)
     osm_pdf = gen_osm(ds_pdf, seed=42)
     pages = gen_pages(ds_pdf, seed=41)
@@ -159,6 +132,11 @@ def test_cli_end_to_end(spark, tmp_path):
         osm_pdf.drop(columns=["kind"]),
         schema="osm_type string, osm_id long, version int, lat double, lon double, tags_raw string",
     ).write.parquet(osm_path)
+    return pages_path, osm_path, osm_pdf
+
+
+def test_cli_end_to_end(spark, tmp_path):
+    pages_path, osm_path, _ = _cli_world(spark, tmp_path)
 
     from osm_conflate_spark.cli import main
 
@@ -171,6 +149,40 @@ def test_cli_end_to_end(spark, tmp_path):
     assert lineage.count() > 0
     # resume: rerunning must reuse checkpoints (stage manifests exist)
     assert os.path.exists(os.path.join(out, "match.manifest.json"))
+
+
+def test_cli_osm_xml_equals_parquet(spark, tmp_path):
+    """``--osm saved.osm`` (the reference's offline input) conflates to
+    the same change rows as the same world read from parquet."""
+    import xml.etree.ElementTree as ET
+
+    from osm_conflate_spark.cli import main
+
+    pages_path, osm_path, osm_pdf = _cli_world(spark, tmp_path)
+    root = ET.Element("osm", version="0.6")
+    for r in osm_pdf.itertuples():
+        lat, lon = repr(float(r.lat)), repr(float(r.lon))
+        el = ET.SubElement(
+            root, r.osm_type, id=str(r.osm_id), version=str(r.version)
+        )
+        if r.osm_type == "node":
+            el.set("lat", lat)
+            el.set("lon", lon)
+        else:
+            ET.SubElement(el, "center", lat=lat, lon=lon)
+        for k, v in parse_tags_raw(r.tags_raw).items():
+            ET.SubElement(el, "tag", k=k, v=v)
+    xml_path = str(tmp_path / "osm.osm")
+    ET.ElementTree(root).write(xml_path, encoding="utf-8", xml_declaration=True)
+
+    changes = {}
+    for name, ref in (("parquet", osm_path), ("xml", xml_path)):
+        out = str(tmp_path / f"out_{name}")
+        main(["--pages", pages_path, "--osm", ref, "--out", out])
+        changes[name] = changes_set_spark(
+            spark.read.parquet(os.path.join(out, "changes_out"))
+        )
+    assert changes["parquet"] and changes["xml"] == changes["parquet"]
 
 
 OSC_WAY_XML = """<?xml version='1.0'?>
