@@ -13,7 +13,7 @@ Layout:
   sources/extract.py   U1 Arrow-vectorized html→text extractor (frozen)
   operators/candidates.py  J1 cell equi-join candidate search
   operators/match.py       J2 exact distributed greedy matcher (applyInPandas)
-  operators/dedup.py       D1/D2 + exact/minhash/simhash/ngram/embedding dedup
+  operators/dedup.py       D1/D2 + minhash/simhash/ngram/embedding near-dup
   operators/changes.py     X2/X3/X4, J4/J5/J6 change emission, osc X5, geojson X6
   operators/similarity.py  ANN top-k over embeddings
   plans/pipeline.py    E1 end-to-end conflation pipeline (stage DAG)

@@ -81,10 +81,8 @@ class ConflateConfig:
     #: range cut over its cells into 16 ~equal-pair chunks, so post-split
     #: kernels are ~cap/16.  Deferred rounds keep the split block ids.
     salt_cap_pairs: int = 1_000_000
-    #: D2 dup graphs up to this many pairs resolve on the driver
-    #: (sequential scan, exact); bigger graphs take the distributed
-    #: fixpoint.  The only D2 driver cap; 0 forces the distributed path
-    #: (driver-contract query)
+    #: the driver finishes a dup graph of at most this many edges; 0 =
+    #: every round distributed
     dedup_driver_max_pairs: int = 500_000
     #: z level for the raster summary tile layer (X8)
     tile_zoom: int = 12

@@ -2,11 +2,11 @@
 
 A crawl-scale pipeline groups, samples, rate-limits and reputations by
 registrable domain; these helpers turn a raw ``url`` string column into
-``host`` / ``registrable domain`` / ``path`` with ONE regex each —
-identical text in Spark (Java regex) and DuckDB (RE2): the patterns use
-only character classes, alternation and groups, which the two engines
-interpret identically.  No Python on the hot path — all three compile
-into whole-stage codegen.
+``host`` / ``registrable domain`` with ONE regex each — identical text
+in Spark (Java regex) and DuckDB (RE2): the patterns use only character
+classes, alternation and groups, which the two engines interpret
+identically.  No Python on the hot path — both compile into
+whole-stage codegen.
 
 Scope (documented, validated by tests): ``scheme://[user@]host[:port]
 /path[?query][#frag]`` with lowercase ASCII hosts.  IPv6 bracket hosts
@@ -36,7 +36,6 @@ SECOND_LEVEL_SUFFIXES = (
 
 _AUTHORITY_RE = "^[a-z][a-z0-9+.-]*://([^/?#]+)"
 _STRIP_USER_PORT_RE = "^(?:[^@]*@)?([^:]+)"
-_PATH_RE = "^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)"
 
 
 def url_host_sql(url: str) -> str:
@@ -47,12 +46,6 @@ def url_host_sql(url: str) -> str:
     """
     auth = f"regexp_extract({url}, '{_AUTHORITY_RE}', 1)"
     return f"regexp_extract({auth}, '{_STRIP_USER_PORT_RE}', 1)"
-
-
-def url_path_sql(url: str) -> str:
-    """Path component of ``url`` ('' when absent — both engines return
-    the empty string for a non-matching regexp_extract)."""
-    return f"regexp_extract({url}, '{_PATH_RE}', 1)"
 
 
 def registrable_domain_sql(host: str, extra_suffixes: tuple = ()) -> str:

@@ -45,10 +45,6 @@ def parse_tags_raw(s: str) -> dict:
     return out
 
 
-def format_tags(d: dict) -> str:
-    return ";".join(f"{k}={v}" for k, v in d.items())
-
-
 def gen_point_cloud(n: int, rng: np.random.Generator, city_frac: float = 0.7):
     """n (lat, lon) float64 points: city clusters + world background."""
     in_city = rng.random(n) < city_frac

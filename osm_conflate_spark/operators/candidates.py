@@ -101,10 +101,10 @@ def candidate_pairs(ds: DataFrame, osm: DataFrame, cfg: ConflateConfig) -> DataF
 _PREFILTER_MAX_CELLS = 20_000_000
 
 
-def self_pairs(ds: DataFrame, cfg: ConflateConfig, radius: float) -> DataFrame:
+def self_pairs(ds: DataFrame, radius: float) -> DataFrame:
     """Dataset self-join pairs strictly within ``radius`` (for D2).
 
-    Emits each unordered pair once, oriented (small_id, big_id).
+    Emits each unordered pair once as ``(a_id, b_id)``, ``a_id < b_id``.
 
     Uses its OWN grid sized to the radius (e.g. 2 m cells for the 1 m
     duplicate_distance), NOT the 200 m match grid — at city densities the
@@ -183,5 +183,5 @@ def self_pairs(ds: DataFrame, cfg: ConflateConfig, radius: float) -> DataFrame:
     return (
         pre.withColumn("dist", distance_udf("a_lat", "a_lon", "b_lat", "b_lon"))
         .where(F.col("dist") < F.lit(radius))
-        .select("a_id", "b_id", F.col("dist").alias("dist_pre"))
+        .select("a_id", "b_id")
     )

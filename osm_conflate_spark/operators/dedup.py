@@ -4,19 +4,24 @@ Conflation-side (reference parity):
   D1 ref-dedup   — duplicate dataset ids, keep-first
                    (``conflate/dataset.py :: read_dataset``, SURVEY §3 D1)
   D2 spatial     — collapse dataset points closer than duplicate_distance
-                   (``check_dataset_for_duplicates``, SURVEY §3 D2)
+                   (``check_dataset_for_duplicates``, SURVEY §3 D2):
+                   distributed rounds shrink the dup graph until the
+                   driver scan can finish it
 
-Training-pipeline additions (first-class per the build brief): exact
-text dedup, MinHash+LSH, SimHash, exact n-gram Jaccard, and
-embedding-cosine near-dup.  All hot paths are JVM Column expressions
-(xxhash64, array/map ops); nothing row-at-a-time.
+Training-pipeline additions (first-class per the build brief):
+MinHash+LSH, SimHash, exact n-gram Jaccard, embedding-cosine near-dup,
+and connected-component clustering of near-dup pairs.  All hot paths
+are JVM Column expressions (xxhash64, array/map ops); nothing
+row-at-a-time.
 """
 
 from __future__ import annotations
 
+import functools
 import random
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import ConflateConfig
@@ -38,146 +43,86 @@ def ref_dedup(ds: DataFrame, order_col: str = "url") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# D2 — spatial duplicate collapse (exact distributed fixpoint)
+# D2 — spatial duplicate collapse (distributed rounds, driver finish)
 # ---------------------------------------------------------------------------
 
-# rounds of the distributed fixpoint (safety valve: running out raises
-# rather than keep the points not yet decided)
+# distributed rounds before the dup graph must fit the driver scan
+# (safety valve: running out raises rather than keep the points not yet
+# decided)
 _MAX_DEDUP_ROUNDS = 64
 
 
 def spatial_dedup(ds: DataFrame, cfg: ConflateConfig) -> DataFrame:
     """Drop a point iff a KEPT point with smaller id lies strictly within
-    ``duplicate_distance`` — the sequential ids-ascending semantics of the
-    oracle, computed as a distributed fixpoint:
+    ``duplicate_distance`` — the sequential ids-ascending scan of the
+    oracle, run over the dup graph (edges ``a_id < b_id``; points with no
+    edge are trivially kept).
 
-    round 0: points with no smaller-id neighbor are KEPT;
-    round k: a point whose every smaller-id neighbor is DROPPED is KEPT,
-             a point with any KEPT smaller-id neighbor is DROPPED.
-
-    Duplicate clusters are metres-sized, so chains are short and the
-    fixpoint converges in a handful of rounds.  Dup graphs of up to
-    ``cfg.dedup_driver_max_pairs`` pairs resolve on the driver instead.
+    While the graph has more than ``cfg.dedup_driver_max_pairs`` edges,
+    one distributed round decides part of it: points with no incoming
+    edge are KEPT, their out-neighbors are LOST, and every edge touching
+    a lost point goes.  A kept point's edges all end in lost points, so
+    the remaining graph holds only undecided points, and the driver scan
+    over it finishes with the oracle's answer.  Duplicate clusters are
+    metres-sized, so chains are short and few rounds run.
     """
-    # Materialized ONCE, serving both branches: the driver probe reads
-    # (up to) cap+1 rows off it, and on overflow the distributed fixpoint
-    # reuses the same materialization instead of recomputing the
-    # self-join from scratch (round-2 verdict #8).
-    pairs = (
-        self_pairs(ds, cfg, cfg.duplicate_distance)
-        .select("a_id", "b_id")
-        .localCheckpoint(eager=True)
-    )
-    # The fixpoint only ever touches ids that APPEAR IN A DUP PAIR — a
-    # tiny set (points with a <duplicate_distance neighbor).  Everything
-    # else is trivially kept.
-    #
-    # Bounded collect: LIMIT cap+1 guards the driver (an adversarial
-    # dense-cluster dataset overflows the limit and routes to the
-    # distributed fixpoint instead of OOMing — round-1 verdict "What's
-    # wrong" #2).  The 500k default keeps the worst-case driver pull to
-    # ~tens of MB; genuinely big dup graphs take the distributed path.
-    dup_pairs = pairs.limit(cfg.dedup_driver_max_pairs + 1).toPandas()
-    if len(dup_pairs) == 0:
-        return ds
-    if len(dup_pairs) <= cfg.dedup_driver_max_pairs:
-        # driver-resolved: sequential ids-ascending scan over the dup
-        # graph (exact oracle semantics, zero extra cluster rounds)
-        import pandas as pd
-
-        by_b: dict = {}
-        ids_in = sorted(set(dup_pairs["a_id"]) | set(dup_pairs["b_id"]))
-        for a, b in zip(dup_pairs["a_id"], dup_pairs["b_id"]):
-            by_b.setdefault(b, []).append(a)
-        status: dict = {}
-        for p in ids_in:  # ascending; a_id < b_id always
-            smaller = by_b.get(p, [])
-            status[p] = "D" if any(status.get(a) == "K" for a in smaller) else "K"
-        dropped_ids = [p for p, s in status.items() if s == "D"]
-        spark = ds.sparkSession
-        dropped = spark.createDataFrame(
-            pd.DataFrame({"id": dropped_ids}), "id string"
-        )
-        return ds.join(F.broadcast(dropped), "id", "left_anti")
-    # distributed fixpoint for big dup volumes — ``pairs`` is already
-    # materialized above and is reused every round
-    ids = pairs.select(F.col("a_id").alias("id")).unionByName(
-        pairs.select(F.col("b_id").alias("id"))
-    ).distinct().localCheckpoint(eager=True)
-    kept = ids.join(pairs.select(F.col("b_id").alias("id")), "id", "left_anti")
-    dropped = ids.limit(0)
-    edges = pairs
-    rounds = 0
-    while edges.limit(1).count() > 0:
-        if rounds == _MAX_DEDUP_ROUNDS:
+    cap = cfg.dedup_driver_max_pairs
+    edges = self_pairs(ds, cfg.duplicate_distance).localCheckpoint(eager=True)
+    lost_rounds: list = []
+    # bounded collect: at most cap+1 edges reach the driver per probe
+    while len(probe := edges.limit(cap + 1).toPandas()) > cap:
+        if len(lost_rounds) == _MAX_DEDUP_ROUNDS:
             raise RuntimeError(
-                f"spatial_dedup: dup edges remain after {rounds} rounds"
+                f"spatial_dedup: dup edges remain after {_MAX_DEDUP_ROUNDS} rounds"
             )
-        rounds += 1
-        newly_dropped = (
-            edges.join(kept.select(F.col("id").alias("a_id")), "a_id", "left_semi")
+        kept = edges.select("a_id").join(
+            edges.select(F.col("b_id").alias("a_id")), "a_id", "left_anti"
+        )
+        lost = (
+            edges.join(kept, "a_id", "left_semi")
             .select(F.col("b_id").alias("id"))
             .distinct()
-        ).localCheckpoint(eager=True)
-        dropped = dropped.unionByName(newly_dropped)
+            .localCheckpoint(eager=True)
+        )
+        lost_rounds.append(lost)
         edges = (
-            edges.join(newly_dropped.select(F.col("id").alias("b_id")), "b_id", "left_anti")
-            .join(dropped.select(F.col("id").alias("a_id")), "a_id", "left_anti")
+            edges.join(lost.withColumnRenamed("id", "a_id"), "a_id", "left_anti")
+            .join(lost.withColumnRenamed("id", "b_id"), "b_id", "left_anti")
+            .localCheckpoint(eager=True)
         )
-        # undecided b's that lost all remaining incoming edges become KEPT
-        remaining_b = edges.select(F.col("b_id").alias("id")).distinct()
-        newly_kept = (
-            pairs.select(F.col("b_id").alias("id"))
-            .distinct()
-            .join(remaining_b, "id", "left_anti")
-            .join(dropped, "id", "left_anti")
-            .join(kept, "id", "left_anti")
-        ).localCheckpoint(eager=True)
-        kept = kept.unionByName(newly_kept)
-        edges = edges.localCheckpoint(eager=True)
-    return ds.join(dropped, "id", "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Exact text dedup (hash-groupBy)
-# ---------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """One row per distinct text: (keeper id = min id, n_dups).
-
-    Groups by a composite text fingerprint (xxhash64 + md5 + length,
-    ~192 bits across two independent hash families) instead of the raw
-    text column, so the exchange carries ~50 bytes/row instead of the
-    full corpus bytes (round-1 verdict: grouping by ``text`` shuffles
-    100 TB through the agg).  A simultaneous collision in both hash
-    functions AND equal lengths is the only wrong-merge case (~2^-96 per
-    pair — far below memory-error rates); the map-side partial agg still
-    applies because the keys are deterministic column expressions.
-    """
-    return (
-        df.groupBy(
-            F.xxhash64(text_col).alias("_h64"),
-            F.md5(text_col).alias("_h128"),
-            F.length(text_col).alias("_len"),
+    if lost_rounds:
+        # no broadcast hint: the round frames can be large
+        lost_all = functools.reduce(DataFrame.unionByName, lost_rounds)
+        ds = ds.join(lost_all, "id", "left_anti")
+    if len(probe):
+        # driver finish: sequential ids-ascending scan over the remainder
+        by_b: dict = {}
+        for a, b in zip(probe["a_id"], probe["b_id"]):
+            by_b.setdefault(b, []).append(a)
+        status: dict = {}
+        for p in sorted(set(probe["a_id"]) | set(probe["b_id"])):
+            smaller = by_b.get(p, [])
+            status[p] = "D" if any(status.get(a) == "K" for a in smaller) else "K"
+        dropped = ds.sparkSession.createDataFrame(
+            pd.DataFrame({"id": [p for p, s in status.items() if s == "D"]}),
+            "id string",
         )
-        .agg(
-            F.min(id_col).alias("keeper_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
-        .select("keeper_id", "n_dups")
-    )
+        ds = ds.join(F.broadcast(dropped), "id", "left_anti")
+    return ds
 
 
 # ---------------------------------------------------------------------------
 # Near-dup cluster assignment (distributed connected components)
 # ---------------------------------------------------------------------------
 
-def dup_clusters(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    pair_a: str = "id_a", pair_b: str = "id_b", max_rounds: int = 32,
-) -> DataFrame:
+# label-propagation rounds (safety valve: running out with labels still
+# changing raises rather than return unconverged clusters)
+_MAX_CLUSTER_ROUNDS = 32
+
+
+def dup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """(doc, cluster_id) — connected components of the near-dup pair
-    graph; ``cluster_id`` = the minimum doc id reachable from the doc.
+    graph ``pairs(id_a, id_b)`` over ``docs(doc_id)``; ``cluster_id`` = the minimum doc id reachable from the doc.
     Docs with no dup pair are their own singleton cluster.
 
     This is the step a real training-data pipeline needs AFTER pair
@@ -190,15 +135,13 @@ def dup_clusters(
     this converges in a handful of rounds; each round is two slim
     shuffles (edge join + min agg) over the PAIR subgraph only — docs
     without pairs never enter the loop.  Convergence is detected with a
-    changed-count job per round; ``max_rounds`` is a safety valve.
+    changed-count job per round.
     """
     # bidirectional slim edge list over the dup subgraph
     edges = (
-        pairs.select(F.col(pair_a).alias("src"), F.col(pair_b).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
-            pairs.select(
-                F.col(pair_b).alias("src"), F.col(pair_a).alias("dst")
-            )
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
         .localCheckpoint(eager=True)
@@ -209,7 +152,7 @@ def dup_clusters(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for _ in range(_MAX_CLUSTER_ROUNDS):
         neighbor_min = (
             edges.join(
                 labels.select(
@@ -235,11 +178,15 @@ def dup_clusters(
         labels = new_labels.drop("changed")
         if n_changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"dup_clusters: labels still changing after {_MAX_CLUSTER_ROUNDS} rounds"
+        )
     clustered = labels.select(
         F.col("node").alias("doc"), F.col("label").alias("cluster_id")
     )
     singletons = (
-        docs.select(F.col(id_col).alias("doc"))
+        docs.select(F.col("doc_id").alias("doc"))
         .join(clustered, "doc", "left_anti")
         .withColumn("cluster_id", F.col("doc"))
     )

@@ -1,9 +1,9 @@
-"""F4 — region filter: keep dataset points inside named regions.
+"""F4 — region assignment: geocode points into named regions.
 
 Reference: ``conflate/geocoder.py`` — geocodes each point against a
-packed region index and keeps points whose region is in the profile's
-``regions`` list (SURVEY §3 F4).  Re-expression: regions are polygons
-(small broadcastable list); each point gets a two-stage test —
+packed region index (SURVEY §3 F4).  Re-expression: regions are
+polygons (small broadcastable list); each point gets a two-stage
+test —
 
 1. cheap vectorized bbox prefilter (numpy, per polygon), then
 2. exact even-odd ray casting (vectorized numpy over the Arrow batch)
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # region polygons: list of (region_code, [(lat, lon), ...]) rings
@@ -74,10 +74,3 @@ def assign_region_col(regions: RegionPolys) -> Column:
 
     return _assign(F.col("lat"), F.col("lon"))
 
-
-def region_filter(
-    ds: DataFrame, regions: RegionPolys, keep: list
-) -> DataFrame:
-    """Keep dataset points geocoded into one of ``keep`` region codes."""
-    tagged = ds.withColumn("region", assign_region_col(regions))
-    return tagged.where(F.col("region").isin(list(keep)))

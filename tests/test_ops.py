@@ -27,17 +27,6 @@ def emb(spark):
 # dedup family
 # ---------------------------------------------------------------------------
 
-def test_exact_dedup(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b")], "doc_id long, text string"
-    )
-    rows = {
-        (r["keeper_id"], r["n_dups"])
-        for r in dd.exact_dedup(df, "text", "doc_id").collect()
-    }
-    assert rows == {(1, 2), (3, 1)}
-
-
 def _jaccard(a: str, b: str, n=3):
     def grams(t):
         toks = [w for w in t.lower().split(" ") if w]

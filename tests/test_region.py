@@ -7,7 +7,6 @@ import pandas as pd
 from osm_conflate_spark.operators.region import (
     assign_region_col,
     point_in_poly_np,
-    region_filter,
 )
 
 
@@ -49,8 +48,6 @@ def test_assign_and_filter(spark):
     tagged = {r["id"]: r["region"] for r in df.withColumn(
         "region", assign_region_col(regions)).collect()}
     assert tagged == {"in_sq": "sq", "in_tri": "tri", "outside": None}
-    kept = {r["id"] for r in region_filter(df, regions, ["sq"]).collect()}
-    assert kept == {"in_sq"}
 
 
 def test_precedence_first_wins(spark):

@@ -4,15 +4,16 @@
   every rule silently executed the last callable);
 * simhash_pairs full recall at the declared Hamming radius (fixed 4x16
   chunking only guaranteed recall for Hamming <= 3);
-* spatial_dedup distributed fixpoint path (driver collect used to happen
-  unconditionally BEFORE the size check).
+* spatial_dedup at every driver cap (the driver collect used to happen
+  unconditionally BEFORE the size check): distributed rounds, driver
+  finish, or both, all equal to the sequential scan.
 """
 
-import dataclasses
-
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from osm_conflate_spark import reference_model as rm
 from osm_conflate_spark.config import ConflateConfig
 from osm_conflate_spark.functions import tags as tagfns
 from osm_conflate_spark.functions.sqlgen import M_PER_DEG
@@ -120,7 +121,7 @@ def test_simhash_rejects_absurd_radius(spark):
 
 
 # ---------------------------------------------------------------------------
-# D2 — distributed fixpoint path == driver path == sequential semantics
+# D2 — distributed rounds + driver finish == sequential semantics
 # ---------------------------------------------------------------------------
 
 def _dup_ds(spark):
@@ -145,23 +146,48 @@ _EXPECTED_KEEP = sorted(
 )
 
 
-def test_spatial_dedup_driver_path(spark):
+@pytest.mark.parametrize("cap", [500_000, 0, 3])
+def test_spatial_dedup_keep_set(spark, cap):
+    """The fixture has 8 dup edges: the default cap is one driver scan,
+    cap 0 runs every round distributed (the path that protects the
+    driver from adversarial dup volumes), and cap 3 runs 2 rounds (8 and
+    4 edges) before the driver finishes the last 2."""
     ds = _dup_ds(spark)
-    cfg = ConflateConfig(duplicate_distance=1.0)
+    cfg = ConflateConfig(duplicate_distance=1.0, dedup_driver_max_pairs=cap)
     keep = sorted(r["id"] for r in dd.spatial_dedup(ds, cfg).collect())
     assert keep == _EXPECTED_KEEP
 
 
-def test_spatial_dedup_distributed_path_matches_driver(spark):
-    """dedup_driver_max_pairs=0 forces the distributed fixpoint (the path
-    that protects the driver from adversarial dup volumes) — must produce
-    the exact same keep set."""
-    ds = _dup_ds(spark)
-    cfg = dataclasses.replace(
-        ConflateConfig(duplicate_distance=1.0), dedup_driver_max_pairs=0
+def _dense_world(seed=11, n=120, clusters=4, width_m=3.0):
+    """Seeded points in ``clusters`` squares ``width_m`` wide; ids are
+    shuffled against position so the scan order crosses the clusters."""
+    rng = np.random.default_rng(seed)
+    c = rng.integers(0, clusters, n)
+    lat = 10.0 + c * 0.01 + rng.uniform(0, width_m, n) / M_PER_DEG
+    lon = 20.0 + rng.uniform(0, width_m, n) / M_PER_DEG
+    ids = rng.permutation(n)
+    return [rm.SourcePoint(f"p{i:04d}", float(a), float(b))
+            for i, a, b in zip(ids, lat, lon)]
+
+
+@pytest.mark.parametrize("cap", [0, 40, 500_000])
+def test_spatial_dedup_matches_reference(spark, cap):
+    """Dense metre-scale clusters (long keep/drop chains) at a cap that
+    forces every round distributed, one below the edge count (rounds,
+    then the driver finish) and the default (driver scan only)."""
+    pts = _dense_world()
+    n_edges = sum(
+        rm.distance(p.lat, p.lon, q.lat, q.lon) < 1.0
+        for i, p in enumerate(pts) for q in pts[i + 1:]
     )
+    assert 40 < n_edges < 500_000
+    ds = spark.createDataFrame(
+        [(p.id, p.lat, p.lon) for p in pts], "id string, lat double, lon double"
+    )
+    cfg = ConflateConfig(duplicate_distance=1.0, dedup_driver_max_pairs=cap)
     keep = sorted(r["id"] for r in dd.spatial_dedup(ds, cfg).collect())
-    assert keep == _EXPECTED_KEEP
+    want, _ = rm.spatial_dedup(pts, 1.0)
+    assert keep == sorted(p.id for p in want)
 
 
 def test_spatial_dedup_round_cap_raises(spark, monkeypatch):

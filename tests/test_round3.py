@@ -197,6 +197,21 @@ def test_dup_clusters_transitive_chain(spark):
     assert keepers == {1: (1, 4), 5: (5, 2), 7: (7, 1)}
 
 
+def test_dup_clusters_round_cap_raises(spark, monkeypatch):
+    """The 1-2-3-4 chain needs more than one round; with the cap at 1 the
+    labels are still changing, and dup_clusters must raise instead of
+    returning unconverged clusters."""
+    from osm_conflate_spark.operators import dedup as dd
+
+    monkeypatch.setattr(dd, "_MAX_CLUSTER_ROUNDS", 1)
+    docs = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(2, 3), (1, 2), (3, 4)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="labels still changing"):
+        dd.dup_clusters(docs, pairs)
+
+
 # ---------------------------------------------------------------------------
 # config_hash — editing a hook body (same __qualname__) must change the
 # hash (ADVICE round 2: stale --resume checkpoints served for edited

@@ -10,7 +10,6 @@ from osm_conflate_spark.functions.web import (
     SECOND_LEVEL_SUFFIXES,
     registrable_domain_sql,
     url_host_sql,
-    url_path_sql,
 )
 
 URLS = [
@@ -40,20 +39,11 @@ def _py_domain(host):
     return ".".join(labels[-2:]) if len(labels) >= 2 else ""
 
 
-def _py_path(url):
-    rest = url.split("://", 1)[1]
-    if "/" not in rest:
-        return ""
-    p = "/" + rest.split("/", 1)[1]
-    return p.split("?", 1)[0].split("#", 1)[0]
-
-
 @pytest.mark.parametrize("engine", ["spark", "duck"])
 def test_url_parsing_matches_python_oracle(engine, spark):
     sel = (
         f"SELECT url, {url_host_sql('url')} AS host, "
-        f"{registrable_domain_sql(url_host_sql('url'))} AS domain, "
-        f"{url_path_sql('url')} AS path FROM urls"
+        f"{registrable_domain_sql(url_host_sql('url'))} AS domain FROM urls"
     )
     if engine == "spark":
         spark.createDataFrame(
@@ -68,14 +58,13 @@ def test_url_parsing_matches_python_oracle(engine, spark):
             + ") t(url)"
         )
         rows = {
-            r[0]: dict(zip(["url", "host", "domain", "path"], r))
+            r[0]: dict(zip(["url", "host", "domain"], r))
             for r in con.sql(sel).fetchall()
         }
     for u in URLS:
         host = _py_host(u)
         assert rows[u]["host"] == host, (engine, u)
         assert rows[u]["domain"] == _py_domain(host), (engine, u)
-        assert rows[u]["path"] == _py_path(u), (engine, u)
 
 
 # --------------------------------------------------------------------------
